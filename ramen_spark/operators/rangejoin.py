@@ -162,9 +162,9 @@ def interval_count_sum(
     <= 5e-19/row), decimal addition is exact and order-independent,
     and the prefix difference IS the exact sum of the cast values —
     within ~n·5e-19 of the true sum, far inside any 6-dp rounding
-    slack. 20 integer digits of headroom bound the GLOBAL prefix
-    magnitude (not per-window): fine for currency/count domains up to
-    ~1e19, which is the documented contract.
+    slack. 19 integer digits of headroom bound the GLOBAL prefix
+    magnitude (not per-window): fine for currency/count domains below
+    1e19, which is the documented contract.
 
     t/lo/hi must be integer longs (epoch micros, ids, offsets) on the
     same axis; ``iid_col`` must uniquely identify interval rows.
@@ -251,13 +251,19 @@ def interval_count_sum(
         .filter(F.col("_flag") == 1)
         .join(F.broadcast(off), "_g")
     )
+    # the signed prefix stays DECIMAL(38,18) end to end: the two terms
+    # are narrowed to (37,18) so their sum needs no scale cut (38,18
+    # + 38,18 would round to 38,17), and the sign negates by type (a
+    # decimal product would be demoted to 38,6)
+    narrow = "decimal(37,18)"
+    prefix = F.col("_ov").cast(narrow) + F.col("_rv").cast(narrow)
     return (
         probes.groupBy("_iid")
         .agg(
             F.sum(F.col("_sign") * (F.col("_oc") + F.col("_rc")))
             .cast("long")
             .alias("n_points"),
-            F.sum(F.col("_sign").cast(dec) * (F.col("_ov") + F.col("_rv")))
+            F.sum(F.when(F.col("_sign") == 1, prefix).otherwise(-prefix))
             .cast(dec)
             .alias("sum_val"),
         )

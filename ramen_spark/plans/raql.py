@@ -6858,7 +6858,9 @@ def compile_commit_streaming(
     count.ramen, tumbling.ramen) route to streaming.commit's WORKER
     mode: one state-store entry holds the whole group hashtable, the
     reference's one-worker-per-function loop — cross-group visibility
-    is inherent to the semantics. Per-group conditions stay on the
+    is inherent to the semantics; a ``cond0`` term of the condition
+    (_commit_cond0) lets each row check only the groups that may fire.
+    Per-group conditions stay on the
     per-group-partitioned scale path. Not supported here (batch-only):
     SORT LAST (reorder repair belongs to the watermark in
     streaming)."""
@@ -6948,6 +6950,18 @@ def compile_commit_streaming(
     fold = _Fold(op, params, sequential=sequential)
     where_fn = fold.update_where if fold_where is not None else None
     if check_all:
+        # a flushed group is dropped unless something reads its last
+        # output or keeps per-group state past the flush
+        keep_flushed = (
+            not flush
+            or sequential
+            or bool(fold.where_rows)
+            or any(
+                isinstance(n, Field) and n.path.startswith(_LAST_OUT_NS)
+                for e in seq_exprs + list(op.group_by)
+                for n in _walk(e)
+            )
+        )
         return streaming_commit_worker(
             df,
             key_cols=keys,
@@ -6960,7 +6974,8 @@ def compile_commit_streaming(
             commit_before=op.commit_before,
             flush=flush,
             where=where_fn,
-            check_all=True,
+            cond0=None if sequential else _commit_cond0(op, fold),
+            keep_flushed=keep_flushed,
         )
     return streaming_commit_aggregate(
         df,
@@ -6975,6 +6990,86 @@ def compile_commit_streaming(
         flush=flush,
         where=where_fn,
     )
+
+
+_LAST_OUT_NS = ("previous.", "local_last.", "local_last_out.", "global_last")
+_CMP_FLIP = {">": "<", ">=": "<=", "<": ">", "<=": ">="}
+
+
+def _volatile(node) -> bool:
+    """RANDOM, now or a global-map write: a value or side effect that
+    depends on how many times, and when, the expression is evaluated."""
+    return any(
+        (isinstance(n, Field) and _strip_ns(n.path).lower() in ("random", "now"))
+        or (isinstance(n, Call) and n.fn in ("mapadd", "mapset"))
+        for n in _walk(node)
+    )
+
+
+def _cond0_side(node) -> str | None:
+    """Classify one side of a comparison: "in" when ``node`` reads
+    only input fields (plus params and literals), "out" when only
+    ``out.`` fields, "const" when neither; None when it reads anything
+    else or holds stateful or volatile calls."""
+    kinds = set()
+    for n in _walk(node):
+        if isinstance(n, Call) and (n.fn in AGGS or n.fn in ROW_STATEFUL):
+            return None
+        if isinstance(n, Field) and not n.path.startswith("param."):
+            if n.path.startswith(_LAST_OUT_NS + ("env.",)):
+                return None
+            kinds.add("out" if n.path.startswith("out.") else "in")
+    if _volatile(node) or len(kinds) > 1:
+        return None
+    return kinds.pop() if kinds else "const"
+
+
+def _commit_cond0(op: Operation, fold: _Fold):
+    """The reference's ``cond0`` (src/CodeGenLib_Skeletons.ml:505-527)
+    for the streaming worker: the first comparison ``f(in) OP g(out)``
+    (OP one of > >= < <=, either side order) that is the whole commit
+    condition or a top-level AND conjunct, so the condition holds only
+    where the term does. Returns a streaming.commit.Cond0 whose keys
+    evaluate f on the input row and g on the group's trigger-path
+    candidate (the same memoized ``finalize`` call commit_cond makes),
+    or None: no such term, or a volatile select field or condition
+    whose draws would depend on which groups get checked."""
+    from ramen_spark.streaming.commit import Cond0
+
+    cond = op.commit_after
+    if _volatile(cond) or any(
+        _volatile(f_.expr) for f_ in op.fields if not isinstance(f_.expr, Star)
+    ):
+        return None
+
+    def conjuncts(n):
+        if isinstance(n, Binop) and n.op == "and":
+            yield from conjuncts(n.a)
+            yield from conjuncts(n.b)
+        else:
+            yield n
+
+    for t in conjuncts(cond):
+        if not (isinstance(t, Binop) and t.op in _CMP_FLIP):
+            continue
+        a, b = _cond0_side(t.a), _cond0_side(t.b)
+        if a in ("in", "const") and b == "out":
+            f_node, cmp, g_node = t.a, t.op, t.b
+            break
+        if b in ("in", "const") and a == "out":
+            f_node, cmp, g_node = t.b, _CMP_FLIP[t.op], t.a
+            break
+    else:
+        return None
+
+    def in_key(row):
+        return fold._eval(f_node, row, None, None, None)
+
+    def out_key(st, prev):
+        last = st.get("__last_row")
+        return fold._eval(g_node, last, None, prev, fold.finalize(st, last, prev))
+
+    return Cond0(in_key, out_key, cmp)
 
 
 def _commit_needs_engine(node) -> bool:

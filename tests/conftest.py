@@ -193,7 +193,6 @@ _SLOW_TESTS = {
     "test_streaming_spec_parity.py::test_streaming_spec_parity[count_checkall]",  # 10.8s
     "test_streaming_spec_parity.py::test_streaming_spec_parity[keep_all_running]",  # 4.7s
     "test_streaming_spec_parity.py::test_streaming_spec_parity[stateful_where]",  # 3.3s
-    "test_streaming_spec_parity.py::test_streaming_spec_parity[tumbling_commit_before]",  # 10.9s
     "test_streaming_spec_parity.py::test_worker_mode_state_survives_micro_batches",  # 18.2s
 }
 
@@ -207,7 +206,9 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier — set SPARK_GRAFT_SLOW_TESTS=1 for the full suite"
     )
     for item in items:
-        # nodeid is like 'tests/test_x.py::test_name[param]'
-        key = item.nodeid.split("/")[-1]
+        # nodeid is like 'tests/test_x.py::test_name[param]'; the
+        # param id may itself contain '/', so only the path part is cut
+        path, _, name = item.nodeid.partition("::")
+        key = f"{path.rsplit('/', 1)[-1]}::{name}"
         if key in _SLOW_TESTS:
             item.add_marker(skip)

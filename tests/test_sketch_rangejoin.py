@@ -259,12 +259,22 @@ def test_interval_join_rejects_column_collision(spark):
 # ---------------------------------------------------------------------------
 
 
-def _count_sum_fixture(spark):
+def _count_sum_fixture(spark, full_mantissa: bool = False):
     # doubles near 2-decimal currency values; a point at t=0 and an
-    # interval with lo=0 exercise the lo-1 = -1 probe bucket
+    # interval with lo=0 exercise the lo-1 = -1 probe bucket. With
+    # full_mantissa, seeded doubles carrying all 17 significant digits
+    # (up to 18 fractional ones) instead.
+    import random
+
+    rng = random.Random(266)
+
+    def val(i):
+        if not full_mantissa:
+            return (i * 37 % 997) / 100.0
+        return rng.uniform(-1e6, 1e6) if i % 3 else rng.uniform(-1, 1) / 7
+
     pts = spark.createDataFrame(
-        [(i * 7 % 1000, (i * 37 % 997) / 100.0) for i in range(500)]
-        + [(0, 1.23)],
+        [(i * 7 % 1000, val(i)) for i in range(500)] + [(0, 1.23)],
         "t long, v double",
     )
     ivs = spark.createDataFrame(
@@ -322,6 +332,39 @@ def test_interval_count_sum_matches_naive_join(spark):
     assert all(
         got[i][1] == 0 for i in zeros
     ) and len(got) == len(naive) + len(zeros)
+
+
+def test_interval_count_sum_exact_at_full_scale(spark):
+    """sum_val is EXACTLY the sum of the points' DECIMAL(38,18) casts,
+    on full-mantissa doubles: no step of the prefix path may cut the
+    scale (a decimal product would demote it to 6 digits, the sum of
+    two (38,18) prefixes to 17)."""
+    from decimal import Decimal
+
+    from ramen_spark.operators.rangejoin import interval_count_sum
+
+    pts, ivs = _count_sum_fixture(spark, full_mantissa=True)
+    cast = [
+        (r["t"], r["d"])
+        for r in pts.select("t", F.col("v").cast("decimal(38,18)").alias("d")).collect()
+    ]
+    want = {
+        r["iid"]: (
+            sum(1 for t, _ in cast if r["lo"] <= t <= r["hi"]),
+            sum((d for t, d in cast if r["lo"] <= t <= r["hi"]), Decimal(0)),
+        )
+        for r in ivs.collect()
+        if r["lo"] <= r["hi"]
+    }
+    assert any(d.as_tuple().exponent == -18 and d % Decimal("1e-6") for _, d in cast)
+    for bucket in (7, 64):
+        got = {
+            r["iid"]: (r["n_points"], r["sum_val"])
+            for r in interval_count_sum(
+                pts, ivs, "t", "lo", "hi", "iid", "v", bucket=bucket
+            ).collect()
+        }
+        assert got == want, bucket
 
 
 def test_interval_count_sum_bucket_width_invariance(spark):
