@@ -36,12 +36,13 @@ Reference parity notes:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 # ---------------------------------------------------------------------------
 # fast path: tumbling event-time window
@@ -105,6 +106,54 @@ def _schema_names(ddl: str) -> list[str]:
     return names
 
 
+def int_columns(schema) -> list[str]:
+    """Names of the integral (byte/short/int/long) fields of a Spark
+    schema."""
+    return [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, (ByteType, ShortType, IntegerType, LongType))
+    ]
+
+
+def decode_rows(
+    pdfs: Iterable[pd.DataFrame],
+    order_col: str | list[str] | None,
+    int_cols: list[str],
+) -> list[Row]:
+    """The fold's view of its pandas input, shared by every fold entry
+    point: one dict per row in ``order_col`` order (stable; None or
+    ``[]`` keeps arrival order), NULL as None, integral columns as
+    Python ints.
+
+    NULLABLE integral columns arrive float64 after the Arrow transfer
+    (pandas has no nullable int64 on this path): 160 → 160.0 — which
+    corrupts anything that FORMATS the value (string concat '||',
+    md5-hash aggregates like KMV DISTINCT). ``int_cols`` (from the
+    Spark schema, which knows the true type) restores them; a value
+    beyond 2^53 is already rounded by the float64 hop."""
+    pdf = pd.concat(pdfs, ignore_index=True)
+    if order_col:
+        pdf = pdf.sort_values(order_col, kind="stable")
+    rows = pdf.astype(object).where(pdf.notna(), None).to_dict("records")
+    ints = [c for c in int_cols if c in pdf.columns and pdf[c].dtype.kind == "f"]
+    if ints:
+        for r in rows:
+            for c in ints:
+                if r[c] is not None:
+                    r[c] = int(r[c])
+    return rows
+
+
+def encode_rows(out_rows: list[Row], cols: list[str]) -> pd.DataFrame:
+    """Committed tuples as a pandas batch of the declared output
+    ``cols``: finalize keeps private (_-prefixed) fields for commit
+    conditions / previous, and the projection drops them."""
+    if out_rows:
+        return pd.DataFrame(out_rows).reindex(columns=cols)
+    return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
+
+
 def commit_aggregate(
     df: DataFrame,
     key_cols: list[str],
@@ -118,7 +167,6 @@ def commit_aggregate(
     flush: bool = True,
     where: Callable[[State, Row, Row | None], bool] | None = None,
     trigger_df: DataFrame | None = None,
-    trigger_mode: str | None = None,
     trigger_in_cols: list[str] | None = None,
 ) -> DataFrame:
     """General COMMIT engine (batch).
@@ -143,22 +191,18 @@ def commit_aggregate(
     f2); rows it rejects advance WHERE state but neither update the
     group nor trigger commits.
 
-    ``trigger_df`` (with ``trigger_mode``): the GLOBAL trigger relation
-    for the reference's ``check_commit_for_all`` path — commit
-    conditions referencing the input tuple, at which EVERY live group
-    must (re-)evaluate its commit (src/CodeGen_Helpers.ml:52,
-    src/CodeGenLib_Skeletons.ml:810-868). Column ``__trig_ord`` holds
-    the global order value; ``trigger_mode``:
-
-    - ``"positions"``: the condition reads only ``in`` — the relation
-      is the pre-filtered trigger positions; every live group commits
-      (and flushes) at each one.
-    - ``"rows"``: the condition also reads out/previous
-      (``COMMIT AFTER in.m <> out.m``, count.ramen / tumbling.ramen) —
-      the relation carries the condition's in-columns
-      (``trigger_in_cols``) for EVERY input row, and each group
-      evaluates ``commit_cond(state, trigger_row, previous)`` against
-      its own candidate.
+    ``trigger_df``: the GLOBAL trigger relation of the reference's
+    ``check_commit_for_all`` path — a commit condition reading the
+    input tuple, at which EVERY live group must (re-)evaluate its
+    commit (src/CodeGen_Helpers.ml:52,
+    src/CodeGenLib_Skeletons.ml:810-868). It holds, for EVERY input
+    row, the global order value ``__trig_ord`` and the condition's
+    in-columns (``trigger_in_cols``, as ``__tc_<col>``). Each group
+    evaluates ``commit_cond(state, trigger_row, previous)`` against
+    its own candidate at each of them, in order, including its own
+    rows: post-update in AFTER mode; in BEFORE mode the own row's
+    pre-update check is the plain one and its trigger is consumed
+    silently.
 
     The trigger relation stays distributed: it is replicated per group
     key (crossJoin with the distinct keys — the reference documents
@@ -166,38 +210,20 @@ def commit_aggregate(
     fan-out is |triggers|×|groups| with both factors expected small)
     and cogrouped into the fold, never materialized on the driver.
 
+    Rows reach the fold through ``decode_rows``: a nullable integral
+    value beyond 2^53 is rounded by PySpark's float64 pandas hop
+    (documented divergence, shared with streaming.commit).
+
     This is the slow general path by design — Python per row, but one
     shuffle total and parallel across groups. Lower to
     ``tumbling_aggregate`` whenever the commit shape allows.
     """
     first_order = order_col if isinstance(order_col, str) else order_col[0]
     in_cols = trigger_in_cols or []
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+    int_cols = int_columns(df.schema)
+    cols = _schema_names(output_schema)
 
-    # NULLABLE integral columns arrive float64 after the Arrow
-    # transfer (pandas has no nullable int64 on this path): 160 → 160.0
-    # — which corrupts anything that FORMATS the value (string concat
-    # '||', md5-hash aggregates like KMV DISTINCT). Restore Python
-    # ints from the Spark schema, which knows the true type.
-    _int_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ByteType, ShortType, IntegerType, LongType))
-    ]
-
-    def fold_with(pdf: pd.DataFrame, trigs: list, trows: list) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="stable")  # str or list of cols
-        # NULLs surface as NaN in float columns after Arrow transfer;
-        # the fold's SKIP/KEEP NULLS semantics need real None
-        pdf = pdf.astype(object).where(pdf.notna(), None)
-        for c in _int_cols:
-            if c in pdf.columns:
-                # explicit object dtype — a bare list assignment would
-                # re-infer float64 and undo the conversion
-                pdf[c] = pd.Series(
-                    [None if v is None else int(v) for v in pdf[c]],
-                    dtype=object, index=pdf.index,
-                )
+    def fold_with(rows: list[Row], trows: list) -> pd.DataFrame:
         out_rows: list[Row] = []
         state = init_state()
         previous: Row | None = None
@@ -210,12 +236,11 @@ def commit_aggregate(
             if flush:
                 state = init_state()
 
-        ti = 0
         tri = 0
 
-        def fire_conditional_triggers(upto, inclusive: bool) -> None:
-            # check-all-with-out mode: evaluate the commit condition
-            # for THIS group against each global input row in order.
+        def fire_triggers(upto, inclusive: bool) -> None:
+            # check-all mode: evaluate the commit condition for THIS
+            # group against each global input row in order.
             # state['__trig'] marks cross-group evaluation: the
             # candidate must build from the group's own last row
             nonlocal tri
@@ -233,15 +258,11 @@ def commit_aggregate(
                     if fire:
                         emit(state.get("__last_row"))
 
-        for row in pdf.to_dict("records"):
+        for row in rows:
             state["__prev_out"] = previous  # previous namespace for update
-            # fire earlier global triggers (rows of OTHER groups)
-            while ti < len(trigs) and trigs[ti] < row[first_order]:
-                ti += 1
-                if state.get("__n", 0) > 0:
-                    emit(state.get("__last_row", row))
             if trows:
-                fire_conditional_triggers(row[first_order], inclusive=False)
+                # triggers before this row (rows of OTHER groups)
+                fire_triggers(row[first_order], inclusive=False)
             if where is not None and not where(state, row, previous):
                 continue
             if commit_before:
@@ -266,68 +287,46 @@ def commit_aggregate(
                 if trows:
                     # the group's own row is also a global trigger,
                     # checked post-update (reference aggregate_one order)
-                    fire_conditional_triggers(row[first_order], inclusive=True)
-                elif trigs:
-                    # trigger mode: this row may itself be the trigger
-                    if ti < len(trigs) and trigs[ti] == row[first_order]:
-                        ti += 1
-                        emit(row)
+                    fire_triggers(row[first_order], inclusive=True)
                 elif commit_cond(state, row, previous):
                     emit(row)
-        while ti < len(trigs):
-            ti += 1
-            if state.get("__n", 0) > 0:
-                emit(state.get("__last_row"))
         if trows:
-            fire_conditional_triggers(float("inf"), inclusive=True)
-        cols = _schema_names(output_schema)
-        if out_rows:
-            # finalize keeps private (_-prefixed) fields for commit
-            # conditions / previous — project to the declared schema
-            return pd.DataFrame(out_rows).reindex(columns=cols)
-        return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
+            fire_triggers(float("inf"), inclusive=True)
+        return encode_rows(out_rows, cols)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        return fold_with(pdf, [], [])
+        return fold_with(decode_rows([pdf], order_col, int_cols), [])
+
+    if trigger_df is None:
+        if key_cols:
+            # groupBy+applyInPandas = exactly one shuffle on the key
+            return df.groupBy(*key_cols).applyInPandas(fold, schema=output_schema)
+        # single global group (reference: no GROUP BY ⇒ one group) —
+        # inherently sequential, matches the reference's execution model
+        return df.groupBy(F.lit(1).alias("_g")).applyInPandas(
+            fold, schema=output_schema
+        )
+
+    trig_int_cols = int_columns(trigger_df.schema)
 
     def fold_cogrouped(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-        # rebuild the per-group trigger list from the cogrouped trigger
-        # relation (this group's replica of the global triggers)
-        tpdf = tpdf.astype(object).where(tpdf.notna(), None)
-        if trigger_mode == "positions":
-            trigs = sorted(tpdf["__trig_ord"].tolist())
-            trows: list = []
-        else:
-            trigs = []
-            trows = sorted(
-                (
-                    (r["__trig_ord"], {c: r[f"__tc_{c}"] for c in in_cols})
-                    for r in tpdf.to_dict("records")
-                ),
-                key=lambda t_: t_[0],
-            )
-        return fold_with(pdf, trigs, trows)
+        # this group's replica of the global trigger relation
+        trows = [
+            (r["__trig_ord"], {c: r[f"__tc_{c}"] for c in in_cols})
+            for r in decode_rows([tpdf], ["__trig_ord"], trig_int_cols)
+        ]
+        return fold_with(decode_rows([pdf], order_col, int_cols), trows)
 
-    if trigger_df is not None:
-        # check-all-groups: cogroup the data with the trigger relation
-        # so every group's fold task receives the global triggers via
-        # the same shuffle — no driver-side materialization
-        if key_cols:
-            # fresh exprIds on the key projection — both cogroup sides
-            # descend from the same source relation
-            keys_df = df.select(
-                *[F.col(k).alias(k) for k in key_cols]
-            ).distinct()
-            trig = trigger_df.crossJoin(F.broadcast(keys_df))
-            grouped = df.groupBy(*key_cols).cogroup(trig.groupBy(*key_cols))
-        else:
-            g = F.lit(1).alias("_g")
-            grouped = df.groupBy(g).cogroup(trigger_df.groupBy(g))
-        return grouped.applyInPandas(fold_cogrouped, schema=output_schema)
-
+    # check-all-groups: cogroup the data with the trigger relation so
+    # every group's fold task receives the global triggers via the same
+    # shuffle — no driver-side materialization
     if key_cols:
-        # groupBy+applyInPandas = exactly one shuffle on the key
-        return df.groupBy(*key_cols).applyInPandas(fold, schema=output_schema)
-    # single global group (reference: no GROUP BY ⇒ one group) —
-    # inherently sequential, matches the reference's execution model
-    return df.groupBy(F.lit(1).alias("_g")).applyInPandas(fold, schema=output_schema)
+        # fresh exprIds on the key projection — both cogroup sides
+        # descend from the same source relation
+        keys_df = df.select(*[F.col(k).alias(k) for k in key_cols]).distinct()
+        trig = trigger_df.crossJoin(F.broadcast(keys_df))
+        grouped = df.groupBy(*key_cols).cogroup(trig.groupBy(*key_cols))
+    else:
+        g = F.lit(1).alias("_g")
+        grouped = df.groupBy(g).cogroup(trigger_df.groupBy(g))
+    return grouped.applyInPandas(fold_cogrouped, schema=output_schema)

@@ -180,8 +180,8 @@ def ngram_jaccard_pairs(
     joins that previously re-attached |A| and |B| to every candidate
     pair (~1/3 of the old wall time).
 
-    Join-shape A/B at the 100× tier (tools/ngram_spill_experiment.py,
-    600 k docs, 2026-08-14): string-keyed sort-merge 64.5 s with
+    Join-shape A/B at the 100× tier (tools/ngram_spill_experiment.py
+    at commit e24ce67, 600 k docs, 2026-08-14): string-keyed sort-merge 64.5 s with
     21 GB sort SPILL on 2.1 GB shuffle write; ``hash64`` keys 36.3 s
     and ZERO spill (the string sort was the entire spill); the
     shuffle-hash hint alone 36.6 s / 11.7 GB; both 26.7 s / zero

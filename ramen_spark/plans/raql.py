@@ -6591,6 +6591,66 @@ def _try_lower_count_commit(
     return res
 
 
+def _reads(op: Operation, prefixes: tuple[str, ...]) -> bool:
+    """True when a select field, the WHERE, the COMMIT condition or a
+    GROUP BY key of ``op`` reads a field under one of ``prefixes``."""
+    exprs = [f_.expr for f_ in op.fields] + list(op.group_by)
+    exprs += [e for e in (op.where, op.commit_after) if e is not None]
+    return any(
+        isinstance(n, Field) and n.path.startswith(prefixes)
+        for e in exprs
+        for n in _walk(e)
+    )
+
+
+def _plan_commit(op: Operation | str, df: DataFrame, params):
+    """The planning step both COMMIT engines share: parse, rewrite
+    event time, default the condition, expand ``*``, inline select
+    refs, detect sequential mode, materialize computed GROUP BY keys
+    and decide check-all once. Returns ``(op, df, flush, keys,
+    sequential, check_all)``; ``df`` carries the ``_gk{i}`` key
+    columns."""
+    if isinstance(op, str):
+        op = parse_operation(op)
+    op = _rewrite_event_time(op)
+    flush = op.flush
+    if op.commit_after is None:
+        # default COMMIT AFTER true; with no GROUP BY this is the
+        # reference's trivial case where stateful functions get
+        # GLOBAL lifespan — state survives the per-row flush
+        # (src/RamenOperation.ml:859-875 set_default_lifespans)
+        op = replace(op, commit_after=Lit(True))
+        if not op.group_by:
+            flush = False
+    op = _expand_star(op, df)
+    op = _inline_select_refs(op, set(df.columns))
+    # global_last_out reads cross-group state: fold the whole stream
+    # as ONE ordered group (the reference's sequential worker loop;
+    # previous.ramen is its spec) with group-scoped namespaces handled
+    # inside _Fold
+    sequential = _reads(op, ("global_last",))
+    keys = []
+    for i, k in enumerate([] if sequential else op.group_by):
+        if isinstance(k, Field):
+            keys.append(_strip_ns(k.path))
+        else:
+            kc = f"_gk{i}"
+            sch = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
+            df = df.withColumn(kc, Compiler(params, schema=sch).col(k))
+            keys.append(kc)
+    # check-all-groups (check_commit_for_all): a condition reading the
+    # input tuple re-checks EVERY live group at each input. A
+    # row-stateful call (lag, hysteresis…) would advance its state once
+    # per checked group, so such conditions fold per group instead.
+    cond = op.commit_after
+    check_all = (
+        not isinstance(cond, Lit)
+        and check_commit_for_all(cond)
+        and not any(isinstance(n, Call) and n.fn in ROW_STATEFUL for n in _walk(cond))
+    )
+    return op, df, flush, keys, sequential, check_all
+
+
 def compile_commit_operation(
     op: Operation | str,
     source_df: DataFrame,
@@ -6610,59 +6670,17 @@ def compile_commit_operation(
     source schema (infer_output_schema). Rows fold in ``ts``-column
     order if present, else input order column ``_rowid``.
 
-    Commit conditions referencing the input tuple put the engine in
-    the reference's check-all-groups mode (check_commit_for_all):
-    the trigger rows are precomputed with a stateless filter and every
-    live group commits at each trigger point."""
+    Check-all commit conditions (``_plan_commit``) cogroup every group
+    with the global trigger relation: the condition's input columns
+    for every input row, at which each live group re-checks its
+    commit."""
     from ramen_spark.operators.aggregate import commit_aggregate
 
-    if isinstance(op, str):
-        op = parse_operation(op)
-    op = _rewrite_event_time(op)
-    flush = op.flush
-    if op.commit_after is None:
-        # default COMMIT AFTER true; with no GROUP BY this is the
-        # reference's trivial case where stateful functions get
-        # GLOBAL lifespan — state survives the per-row flush
-        # (src/RamenOperation.ml:859-875 set_default_lifespans)
-        op = replace(op, commit_after=Lit(True))
-        if not op.group_by:
-            flush = False
-
-    df = source_df
-    op = _expand_star(op, df)
-    op = _inline_select_refs(op, set(df.columns))
-    # global_last_out reads cross-group state: fold the whole stream
-    # as ONE ordered group (the reference's sequential worker loop)
-    # with group-scoped namespaces handled inside _Fold
-    seq_exprs = [f_.expr for f_ in op.fields if not isinstance(f_.expr, Star)]
-    if op.where is not None:
-        seq_exprs.append(op.where)
-    if op.commit_after is not None:
-        seq_exprs.append(op.commit_after)
-    sequential = any(
-        isinstance(n, Field) and n.path.startswith("global_last")
-        for e in seq_exprs
-        for n in _walk(e)
-    )
-    keys = []
-    for i, k in enumerate([] if sequential else op.group_by):
-        if isinstance(k, Field):
-            keys.append(_strip_ns(k.path))
-        else:
-            kc = f"_gk{i}"
-            df = df.withColumn(kc, Compiler(params, schema={f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}).col(k))
-            keys.append(kc)
+    op, df, flush, keys, sequential, check_all = _plan_commit(op, source_df, params)
 
     # WHERE: stateless → Catalyst filter before the shuffle (the
     # reference's where_fast); stateful → evaluated inside the fold
-    commit_for_all = (
-        op.commit_after is not None
-        and not isinstance(op.commit_after, Lit)
-        and check_commit_for_all(op.commit_after)
-    )
     df_pre = None  # pre-WHERE relation for the check-all trigger scan
-    where_fn = None
     fold_where = None
     if op.where is not None:
         if any(
@@ -6671,7 +6689,7 @@ def compile_commit_operation(
         ):
             fold_where = op.where
         else:
-            if commit_for_all and op.sort_last is None:
+            if check_all and op.sort_last is None:
                 # check_commit_for_all runs for EVERY input tuple,
                 # including ones failing WHERE (CodeGenLib_Skeletons.
                 # ml:808-812 runs after the `None -> ()` where-fail
@@ -6684,7 +6702,8 @@ def compile_commit_operation(
                         "_rowid", F.monotonically_increasing_id()
                     )
                 df_pre = df
-            df = df.filter(Compiler(params, schema={f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}).col(op.where))
+            sch = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
+            df = df.filter(Compiler(params, schema=sch).col(op.where))
             op = replace(op, where=None)
 
     if order_cols is None and op.sort_last is not None:
@@ -6743,37 +6762,18 @@ def compile_commit_operation(
         df = df.withColumn("_rowid", F.monotonically_increasing_id())
         order_col = "_rowid"
 
-    # check-all-groups commit (condition references `in`): compute the
-    # global trigger relation as a DATAFRAME — it rides the shuffle
-    # into the fold (cogroup in commit_aggregate), never the driver
-    refs_beyond_in = _commit_needs_engine(op.commit_after) or any(
-        isinstance(n, Field)
-        and n.path.startswith(("out.", "previous.", "local_last.", "local_last_out.", "global_last"))
-        for n in _walk(op.commit_after)
-    )
-    trigger_mode = None
-    if not isinstance(op.commit_after, Lit) and check_commit_for_all(op.commit_after):
-        if not refs_beyond_in:
-            trigger_mode = "positions"
-        elif not any(
-            isinstance(n, Call) and n.fn in ROW_STATEFUL
-            for n in _walk(op.commit_after)
-        ):
-            trigger_mode = "rows"
-
     if output_schema is None:
         output_schema = infer_output_schema(op, df.schema, params)
 
     # count-window fast path: AFTER-mode, FLUSH, stateless-where-only
     # shapes lower to native window aggregates (no Python fold). A
-    # "rows"-mode trigger shape may still lower: the count condition is
+    # check-all shape may still lower: the count condition is
     # per-group state only, so the check-all trigger scan is subsumed
     # by the lowered window (each group's own rows are its triggers).
     if (
         not op.commit_before
         and flush
         and fold_where is None
-        and trigger_mode != "positions"
         and (op.sort_last is None or op.sort_last[2] is None)
     ):
         lowered = _try_lower_count_commit(
@@ -6782,43 +6782,32 @@ def compile_commit_operation(
         if lowered is not None:
             return lowered
 
-    # trigger relation built only when the fold actually runs — as a
-    # DATAFRAME that rides the shuffle (cogroup in commit_aggregate),
+    # the trigger relation (the reference's explicitly-slow check-all
+    # path, src/CodeGenLib_Skeletons.ml:810-868): the in-referenced
+    # columns of EVERY row, built only when the fold actually runs — as
+    # a DATAFRAME that rides the shuffle (cogroup in commit_aggregate),
     # never a driver-side collect
     trigger_df = None
     trigger_in_cols: list[str] = []
-    if trigger_mode is not None:
+    if check_all:
         first_order = order_col if isinstance(order_col, str) else order_col[0]
         trig_src = df_pre if df_pre is not None else df
-        if trigger_mode == "positions":
-            # pure-`in` condition: a stateless filter gives the global
-            # trigger positions at which every live group commits
-            trigger_df = trig_src.filter(
-                Compiler(params, schema={f_.name: f_.dataType.simpleString() for f_ in trig_src.schema.fields}).col(op.commit_after)
-            ).select(F.col(first_order).alias("__trig_ord"))
-        else:
-            # in+out mixed condition (COMMIT AFTER in.start > out.stop):
-            # the in-referenced columns of EVERY row form the global
-            # conditional-trigger relation (the reference's explicitly-
-            # slow check-all path, src/CodeGenLib_Skeletons.ml:810-868)
-            trigger_in_cols = sorted(
-                {
-                    _strip_ns(n.path)
-                    for n in _walk(op.commit_after)
-                    if isinstance(n, Field)
-                    and not n.path.startswith(
-                        ("out.", "previous.", "local_last.", "local_last_out.", "global_last", "param.", "#")
-                    )
-                    and _strip_ns(n.path) in df.columns
-                }
-            )
-            # __tc_ prefix: fresh exprIds AND no name collision with
-            # the group keys when commit_aggregate replicates the
-            # trigger relation per key (crossJoin on the same source)
-            trigger_df = trig_src.select(
-                F.col(first_order).alias("__trig_ord"),
-                *[F.col(c).alias(f"__tc_{c}") for c in trigger_in_cols],
-            )
+        trigger_in_cols = sorted(
+            {
+                _strip_ns(n.path)
+                for n in _walk(op.commit_after)
+                if isinstance(n, Field)
+                and not n.path.startswith(_LAST_OUT_NS + ("out.", "param.", "#"))
+                and _strip_ns(n.path) in df.columns
+            }
+        )
+        # __tc_ prefix: fresh exprIds AND no name collision with
+        # the group keys when commit_aggregate replicates the
+        # trigger relation per key (crossJoin on the same source)
+        trigger_df = trig_src.select(
+            F.col(first_order).alias("__trig_ord"),
+            *[F.col(c).alias(f"__tc_{c}") for c in trigger_in_cols],
+        )
 
     fold = _Fold(op, params, sequential=sequential)
     return commit_aggregate(
@@ -6834,7 +6823,6 @@ def compile_commit_operation(
         flush=flush,
         where=fold.update_where if fold_where is not None else None,
         trigger_df=trigger_df,
-        trigger_mode=trigger_mode,
         trigger_in_cols=trigger_in_cols,
     )
 
@@ -6846,21 +6834,21 @@ def compile_commit_streaming(
     params: dict[str, Any] | None = None,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Streaming twin of compile_commit_operation: the same parsed
-    Operation and _Fold callbacks run incrementally under
+    """Streaming twin of compile_commit_operation: the same planning
+    step (``_plan_commit``) and _Fold callbacks run incrementally under
     ``applyInPandasWithState`` (streaming.commit), state per group key
     in the state store — the reference's long-lived worker loop
     (src/CodeGenLib_Skeletons.ml:717-760) mapped onto Structured
     Streaming. Batch compile_commit_operation is the semantic oracle;
     ordering holds within a micro-batch (see streaming.commit caveat).
 
-    check-all-groups commit conditions (COMMIT on ANY incoming tuple —
-    count.ramen, tumbling.ramen) route to streaming.commit's WORKER
-    mode: one state-store entry holds the whole group hashtable, the
-    reference's one-worker-per-function loop — cross-group visibility
-    is inherent to the semantics; a ``cond0`` term of the condition
-    (_commit_cond0) lets each row check only the groups that may fire.
-    Per-group conditions stay on the
+    The shared check-all decision routes conditions that re-check
+    every group on any incoming tuple (count.ramen, tumbling.ramen) to
+    streaming.commit's WORKER mode: one state-store entry holds the
+    whole group hashtable, the reference's one-worker-per-function
+    loop — cross-group visibility is inherent to the semantics; a
+    ``cond0`` term of the condition (_commit_cond0) lets each row check
+    only the groups that may fire. Other conditions stay on the
     per-group-partitioned scale path. Not supported here (batch-only):
     SORT LAST (reorder repair belongs to the watermark in
     streaming)."""
@@ -6869,55 +6857,10 @@ def compile_commit_streaming(
         streaming_commit_worker,
     )
 
-    if isinstance(op, str):
-        op = parse_operation(op)
-    op = _rewrite_event_time(op)
+    op, df, flush, keys, sequential, check_all = _plan_commit(op, stream_df, params)
     if op.sort_last is not None:
         raise NotImplementedError("SORT LAST in streaming: use the watermark")
-    flush = op.flush
-    if op.commit_after is None:
-        # default COMMIT AFTER true (global-lifespan state when
-        # ungrouped — src/RamenOperation.ml:859-875)
-        op = replace(op, commit_after=Lit(True))
-        if not op.group_by:
-            flush = False
 
-    df = stream_df
-    op = _expand_star(op, df)
-    op = _inline_select_refs(op, set(df.columns))
-    # global_last_out reads cross-group state: fold the whole stream
-    # as ONE ordered group, exactly as the batch engine does (the
-    # reference's sequential worker loop; previous.ramen is its spec)
-    seq_exprs = [f_.expr for f_ in op.fields if not isinstance(f_.expr, Star)]
-    if op.where is not None:
-        seq_exprs.append(op.where)
-    if op.commit_after is not None:
-        seq_exprs.append(op.commit_after)
-    sequential = any(
-        isinstance(n, Field) and n.path.startswith("global_last")
-        for e in seq_exprs
-        for n in _walk(e)
-    )
-    keys = []
-    for i, k in enumerate([] if sequential else op.group_by):
-        if isinstance(k, Field):
-            keys.append(_strip_ns(k.path))
-        else:
-            kc = f"_gk{i}"
-            df = df.withColumn(kc, Compiler(params, schema={f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}).col(k))
-            keys.append(kc)
-
-    # worker-mode routing mirrors the batch trigger-mode decision
-    # exactly (row-stateful conditions fall back to the plain
-    # per-group fold in both engines)
-    check_all = (
-        not isinstance(op.commit_after, Lit)
-        and check_commit_for_all(op.commit_after)
-        and not any(
-            isinstance(n, Call) and n.fn in ROW_STATEFUL
-            for n in _walk(op.commit_after)
-        )
-    )
     fold_where = None
     if op.where is not None:
         if check_all or any(
@@ -6929,7 +6872,8 @@ def compile_commit_streaming(
             # inside the worker fold, not as a Catalyst pre-filter
             fold_where = op.where
         else:
-            df = df.filter(Compiler(params, schema={f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}).col(op.where))
+            sch = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
+            df = df.filter(Compiler(params, schema=sch).col(op.where))
             op = replace(op, where=None)
 
     if order_cols is not None:
@@ -6956,11 +6900,7 @@ def compile_commit_streaming(
             not flush
             or sequential
             or bool(fold.where_rows)
-            or any(
-                isinstance(n, Field) and n.path.startswith(_LAST_OUT_NS)
-                for e in seq_exprs + list(op.group_by)
-                for n in _walk(e)
-            )
+            or _reads(op, _LAST_OUT_NS)
         )
         return streaming_commit_worker(
             df,

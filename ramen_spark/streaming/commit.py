@@ -14,6 +14,13 @@ Caveat (documented): ordering is guaranteed WITHIN a micro-batch by
 the explicit sort; cross-batch reordering beyond the watermark is the
 same trade every streaming engine makes. The batch engine is the
 semantic oracle (SURVEY §7 'hard parts').
+
+Both folds here decode their pandas batches with the batch engine's
+``decode_rows`` (order, NULLs, integral columns restored from the
+Spark schema) and encode with its ``encode_rows``, so a value reads
+the same in both engines — including the documented divergence: a
+nullable integral value beyond 2^53 is rounded by PySpark's float64
+pandas hop.
 """
 
 from __future__ import annotations
@@ -29,6 +36,13 @@ from typing import Any, NamedTuple
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ramen_spark.operators.aggregate import (
+    _schema_names,
+    decode_rows,
+    encode_rows,
+    int_columns,
+)
 
 State = dict[str, Any]
 Row = dict[str, Any]
@@ -69,10 +83,7 @@ def streaming_commit_aggregate(
     ``order_col`` None ⇒ ARRIVAL order within each micro-batch (the
     reference's worker loop consumes its ringbuf in arrival order).
     """
-    order_list = (
-        [order_col] if isinstance(order_col, str)
-        else list(order_col) if order_col else []
-    )
+    int_cols, cols = int_columns(df.schema), _schema_names(output_schema)
 
     def process(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -85,14 +96,7 @@ def streaming_commit_aggregate(
             st, previous = init_state(), None
 
         out_rows: list[Row] = []
-        rows: list[Row] = []
-        for pdf in pdfs:
-            pdf = pdf.astype(object).where(pdf.notna(), None)
-            rows.extend(pdf.to_dict("records"))
-        if order_list:
-            rows.sort(key=lambda r: tuple(r[c] for c in order_list))
-
-        for row in rows:
+        for row in decode_rows(pdfs, order_col, int_cols):
             if isinstance(st, dict):
                 st["__prev_out"] = previous  # previous namespace for update
             if where is not None and not where(st, row, previous):
@@ -122,11 +126,7 @@ def streaming_commit_aggregate(
 
         state.update((_enc(st), _enc(previous) if previous else None))
         if out_rows:
-            from ramen_spark.operators.aggregate import _schema_names
-
-            yield pd.DataFrame(out_rows).reindex(
-                columns=_schema_names(output_schema)
-            )
+            yield encode_rows(out_rows, cols)
 
     from pyspark.sql import functions as F
 
@@ -144,8 +144,6 @@ def streaming_commit_aggregate(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
 
 
 class Cond0(NamedTuple):
@@ -384,10 +382,7 @@ def streaming_commit_worker(
 
     ``order_col`` None ⇒ arrival order within each micro-batch.
     """
-    order_list = (
-        [order_col] if isinstance(order_col, str)
-        else list(order_col) if order_col else []
-    )
+    int_cols, cols = int_columns(df.schema), _schema_names(output_schema)
     fold = WorkerFold(
         key_cols, init_state, update, finalize, commit_cond,
         commit_before=commit_before, flush=flush, where=where,
@@ -398,21 +393,10 @@ def streaming_commit_worker(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
         groups: dict[tuple, dict] = _dec(state.get[0]) if state.exists else {}
-        rows: list[Row] = []
-        for pdf in pdfs:
-            pdf = pdf.astype(object).where(pdf.notna(), None)
-            rows.extend(pdf.to_dict("records"))
-        if order_list:
-            rows.sort(key=lambda r: tuple(r[c] for c in order_list))
-        out_rows = fold(groups, rows)
-
+        out_rows = fold(groups, decode_rows(pdfs, order_col, int_cols))
         state.update((_enc(groups), None))
         if out_rows:
-            from ramen_spark.operators.aggregate import _schema_names
-
-            yield pd.DataFrame(out_rows).reindex(
-                columns=_schema_names(output_schema)
-            )
+            yield encode_rows(out_rows, cols)
 
     from pyspark.sql import functions as F
 

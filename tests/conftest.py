@@ -128,7 +128,6 @@ _SLOW_TESTS = {
     "test_streaming.py::test_streaming_soak_bounded_state_and_retention",  # 101.6s
     "test_streaming.py::test_tumbling_stream_matches_batch",  # 2.9s
     "test_streaming_dedup.py::test_streaming_curation_equals_batch",  # 6.9s
-    "test_streaming_dedup.py::test_streaming_decontaminate_equals_batch",  # 3.3s
     "test_streaming_dedup.py::test_streaming_equals_batch_self_dedup",  # 8.8s
     "test_streaming_dedup.py::test_streaming_exact_dedup_first_arrival",  # 5.2s
     "test_streaming_dedup.py::test_streaming_seeded_equals_between_plus_self",  # 8.2s

@@ -307,7 +307,7 @@ def test_checkall_triggers_stay_distributed(spark):
         + [("b", i + 6, float(i)) for i in range(6)],
         "k string, seq int, v double",
     )
-    # in+out mixed condition → "rows" trigger mode
+    # in+out mixed condition
     out = compile_commit_operation(
         "select k, sum v as s group by k commit after in.seq > out.s",
         df,
@@ -318,7 +318,7 @@ def test_checkall_triggers_stay_distributed(spark):
     assert "FlatMapCoGroupsInPandas" in plan, plan
     assert "__trig_ord" in plan, plan
 
-    # pure-in condition → "positions" trigger mode, same property
+    # pure-in condition: the same trigger relation, same property
     out = compile_commit_operation(
         "select k, sum v as s group by k commit after in.seq % 3 = 2",
         df,

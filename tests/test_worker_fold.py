@@ -18,7 +18,7 @@ import random
 
 import pytest
 
-from ramen_spark.operators.aggregate import _schema_names
+from ramen_spark.operators.aggregate import _schema_names, decode_rows, int_columns
 from ramen_spark.plans.raql import compile_commit_operation, compile_commit_streaming
 from ramen_spark.streaming import commit as C
 
@@ -55,9 +55,8 @@ def _compiled(spark, monkeypatch, text: str, rows: list[tuple]):
     src = spark.createDataFrame(rows, SCHEMA)
     compile_commit_streaming(text, src, order_cols=["seq"])
     assert captured, "expected the worker (check-all) path"
-    pdf = captured.pop("df").toPandas()
-    in_rows = pdf.astype(object).where(pdf.notna(), None).to_dict("records")
-    in_rows.sort(key=lambda r: r["seq"])
+    df = captured.pop("df")
+    in_rows = decode_rows([df.toPandas()], "seq", int_columns(df.schema))
     captured.pop("order_col")
     names = _schema_names(captured.pop("output_schema"))
     return captured, in_rows, names, src
@@ -161,6 +160,38 @@ SHAPES = [
     (
         "scan_ne",
         "select k, count 1 as n group by k commit after in.k <> out.k",
+        None,
+    ),
+    # pure-`in` conditions: every live group commits at each input row
+    # the condition accepts (the batch engine's one trigger relation)
+    (
+        "in_after",
+        "select min t as t, k, count 1 as n, sum v as s "
+        "group by k commit after in.v > 4",
+        None,
+    ),
+    (
+        "in_mod",
+        "select min t as t, k, count 1 as n group by k commit after in.seq % 17 = 0",
+        None,
+    ),
+    # the own row's BEFORE check consumes its trigger: the freshly
+    # seeded group must not commit again at its next row
+    (
+        "in_before",
+        "select min t as t, k, count 1 as n group by k commit before in.v < -4",
+        None,
+    ),
+    (
+        "in_where",
+        "select min t as t, k, count 1 as n where x > 10 "
+        "group by k commit after in.v > 3",
+        None,
+    ),
+    (
+        "in_keep",
+        "select k, sum v as s, count 1 as n "
+        "group by k commit and keep after in.x >= 38",
         None,
     ),
 ]

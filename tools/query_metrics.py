@@ -115,6 +115,61 @@ def latest_execution_id(spark) -> int:
         return -1
 
 
+def _status_store_metrics(
+    spark, after_id: int | None, timeout_s: float, last_only: bool
+) -> dict[str, int]:
+    """The one status-store walk behind both readers below: wait until
+    an execution newer than ``after_id`` (any, when None) appears, then
+    sum shuffle and spill bytes and take the max operator peak over the
+    newest execution (``last_only``) or over every newer one."""
+    import time as _time
+
+    try:
+        store = spark._jsparkSession.sharedState().statusStore()
+        deadline = _time.monotonic() + timeout_s
+        while True:
+            execs = store.executionsList()
+            n = execs.size()
+            if n > 0 and (
+                after_id is None or execs.apply(n - 1).executionId() > after_id
+            ):
+                break
+            if _time.monotonic() > deadline:
+                return {}
+            _time.sleep(0.05)
+        if last_only:
+            picked = [execs.apply(n - 1)]
+        else:
+            picked = [
+                e for e in map(execs.apply, range(n)) if e.executionId() > after_id
+            ]
+        shuffle = spill = peak = 0
+        for e in picked:
+            names = {}
+            mit = e.metrics().iterator()
+            while mit.hasNext():
+                m = mit.next()
+                names[m.accumulatorId()] = m.name()
+            it = store.executionMetrics(e.executionId()).iterator()
+            while it.hasNext():
+                kv = it.next()
+                nm = names.get(kv._1())
+                if nm == "shuffle bytes written":
+                    shuffle += _parse_bytes(kv._2())
+                elif nm == "spill size":
+                    spill += _parse_bytes(kv._2())
+                elif nm == "peak memory":
+                    # per-operator peak execution memory; the MAX single
+                    # operator is the number that has to fit an executor
+                    peak = max(peak, _parse_bytes(kv._2()))
+        out = {"shuffle_bytes": shuffle, "spill_bytes": spill}
+        if peak:
+            out["peak_op_memory_bytes"] = peak
+        return out
+    except Exception:  # pragma: no cover — telemetry only
+        return {}
+
+
 def last_execution_metrics(
     spark, after_id: int | None = None, timeout_s: float = 2.0
 ) -> dict[str, int]:
@@ -134,45 +189,7 @@ def last_execution_metrics(
     Iterative queries (e.g. label propagation with per-round
     localCheckpoint) run several executions; this reports the FINAL
     action's execution only — the per-round work is not summed."""
-    import time as _time
-
-    try:
-        store = spark._jsparkSession.sharedState().statusStore()
-        deadline = _time.monotonic() + timeout_s
-        while True:
-            execs = store.executionsList()
-            if execs.size() > 0:
-                e = execs.apply(execs.size() - 1)
-                if after_id is None or e.executionId() > after_id:
-                    break
-            if _time.monotonic() > deadline:
-                return {}
-            _time.sleep(0.05)
-        names = {}
-        mit = e.metrics().iterator()
-        while mit.hasNext():
-            m = mit.next()
-            names[m.accumulatorId()] = m.name()
-        vals = store.executionMetrics(e.executionId())
-        it = vals.iterator()
-        shuffle = spill = peak = 0
-        while it.hasNext():
-            kv = it.next()
-            nm = names.get(kv._1())
-            if nm == "shuffle bytes written":
-                shuffle += _parse_bytes(kv._2())
-            elif nm == "spill size":
-                spill += _parse_bytes(kv._2())
-            elif nm == "peak memory":
-                # per-operator peak execution memory; the MAX single
-                # operator is the number that has to fit an executor
-                peak = max(peak, _parse_bytes(kv._2()))
-        out = {"shuffle_bytes": shuffle, "spill_bytes": spill}
-        if peak:
-            out["peak_op_memory_bytes"] = peak
-        return out
-    except Exception:  # pragma: no cover — telemetry only
-        return {}
+    return _status_store_metrics(spark, after_id, timeout_s, last_only=True)
 
 
 def executions_metrics_since(
@@ -188,45 +205,4 @@ def executions_metrics_since(
     across executions (it is a per-operator high-water mark, not a
     volume). Returns {} when the store is unreadable or nothing newer
     than ``after_id`` appears within the timeout."""
-    import time as _time
-
-    try:
-        store = spark._jsparkSession.sharedState().statusStore()
-        deadline = _time.monotonic() + timeout_s
-        while True:
-            execs = store.executionsList()
-            if (
-                execs.size() > 0
-                and execs.apply(execs.size() - 1).executionId() > after_id
-            ):
-                break
-            if _time.monotonic() > deadline:
-                return {}
-            _time.sleep(0.05)
-        shuffle = spill = peak = 0
-        for i in range(execs.size()):
-            e = execs.apply(i)
-            if e.executionId() <= after_id:
-                continue
-            names = {}
-            mit = e.metrics().iterator()
-            while mit.hasNext():
-                m = mit.next()
-                names[m.accumulatorId()] = m.name()
-            vals = store.executionMetrics(e.executionId())
-            it = vals.iterator()
-            while it.hasNext():
-                kv = it.next()
-                nm = names.get(kv._1())
-                if nm == "shuffle bytes written":
-                    shuffle += _parse_bytes(kv._2())
-                elif nm == "spill size":
-                    spill += _parse_bytes(kv._2())
-                elif nm == "peak memory":
-                    peak = max(peak, _parse_bytes(kv._2()))
-        out = {"shuffle_bytes": shuffle, "spill_bytes": spill}
-        if peak:
-            out["peak_op_memory_bytes"] = peak
-        return out
-    except Exception:  # pragma: no cover — telemetry only
-        return {}
+    return _status_store_metrics(spark, after_id, timeout_s, last_only=False)
