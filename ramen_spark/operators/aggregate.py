@@ -209,6 +209,12 @@ def commit_aggregate(
     check-all as the slow path meant for few-group aggregations, so the
     fan-out is |triggers|×|groups| with both factors expected small)
     and cogrouped into the fold, never materialized on the driver.
+    Other groups' triggers are placed by comparing ``__trig_ord`` with
+    the row's order value, so with ties in the order column this fold
+    and the streaming ``WorkerFold`` (which walks rows one at a time,
+    tied rows in arrival order) can commit different windows
+    (documented divergence; strict-xfail cases in
+    tests/test_worker_fold.py).
 
     Rows reach the fold through ``decode_rows``: a nullable integral
     value beyond 2^53 is rounded by PySpark's float64 pandas hop

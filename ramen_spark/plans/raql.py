@@ -6852,6 +6852,19 @@ def compile_commit_streaming(
     per-group-partitioned scale path. Not supported here (batch-only):
     SORT LAST (reorder repair belongs to the watermark in
     streaming)."""
+    return _commit_streaming(op, stream_df, output_schema, params, order_cols)[0]
+
+
+def _commit_streaming(
+    op: Operation | str,
+    stream_df: DataFrame,
+    output_schema: str | None,
+    params: dict[str, Any] | None,
+    order_cols: list[str] | None,
+) -> tuple[DataFrame, bool]:
+    """compile_commit_streaming, also returning whether the stateful
+    operator groups by a constant key (worker mode's ``_w``, or ``_g``
+    with no GROUP BY): such a query's state fits one partition."""
     from ramen_spark.streaming.commit import (
         streaming_commit_aggregate,
         streaming_commit_worker,
@@ -6893,6 +6906,7 @@ def compile_commit_streaming(
 
     fold = _Fold(op, params, sequential=sequential)
     where_fn = fold.update_where if fold_where is not None else None
+    constant_key = check_all or not keys
     if check_all:
         # a flushed group is dropped unless something reads its last
         # output or keeps per-group state past the flush
@@ -6916,7 +6930,7 @@ def compile_commit_streaming(
             where=where_fn,
             cond0=None if sequential else _commit_cond0(op, fold),
             keep_flushed=keep_flushed,
-        )
+        ), constant_key
     return streaming_commit_aggregate(
         df,
         key_cols=keys,
@@ -6929,7 +6943,7 @@ def compile_commit_streaming(
         commit_before=op.commit_before,
         flush=flush,
         where=where_fn,
-    )
+    ), constant_key
 
 
 _LAST_OUT_NS = ("previous.", "local_last.", "local_last_out.", "global_last")

@@ -83,15 +83,16 @@ def deploy_program(
     return dfs, cat
 
 
-def _compile_fn(op, src, params, order_cols):
+def _compile_fn(op, src, params, order_cols) -> tuple[DataFrame, bool]:
     """Route one function's Operation to the streaming fold engine or
     the stateless Column compiler (the same decision the batch body
-    makes)."""
+    makes). Also returns whether the query's stateful operator groups
+    by a constant key."""
     from pyspark.sql.types import ArrayType
 
     from ramen_spark.plans.raql import (
+        _commit_streaming,
         _needs_fold_engine,
-        compile_commit_streaming,
         compile_operation,
     )
 
@@ -102,10 +103,42 @@ def _compile_fn(op, src, params, order_cols):
     if _needs_fold_engine(op, src_arr) or op.group_by or (
         op.commit_after is not None
     ):
-        return compile_commit_streaming(
-            op, src, params=params, order_cols=order_cols
+        return _commit_streaming(op, src, None, params, order_cols)
+    return compile_operation(op, src, params), False
+
+
+def _start_spooled(spark, compiled, constant_key, work_dir, prog_name, name):
+    """Start one function's query, appending to the parquet spool
+    ``work_dir/<prog>/<fn>`` (checkpoint ``work_dir/_ckpt/<prog>/<fn>``).
+    A constant-key stateful query starts with ONE state partition (see
+    deploy_program_streaming): the session's count would add stores
+    that are always empty, yet each loads, commits and checkpoints on
+    every micro-batch."""
+    import os
+
+    spool = os.path.join(work_dir, prog_name, name)
+    os.makedirs(spool, exist_ok=True)
+    writer = (
+        compiled.writeStream.format("parquet")
+        .option("path", spool)
+        .option(
+            "checkpointLocation",
+            os.path.join(work_dir, "_ckpt", prog_name, name),
         )
-    return compile_operation(op, src, params)
+        .outputMode("append")
+    )
+    if not constant_key:
+        return compiled, writer.start(), spool
+    # start() clones the session conf, so the override covers this
+    # one query only
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(key, saved)
+    return compiled, q, spool
 
 
 def deploy_program_streaming(
@@ -138,6 +171,15 @@ def deploy_program_streaming(
     replayed); any other key serves as an external parent (cross-
     program references, including ``../prog/fn`` relative paths).
 
+    State partitions: a query whose stateful operator groups by a
+    constant key — check-all worker mode (``_w``) or a fold with no
+    GROUP BY (``_g``) — starts with one state partition, since its
+    state is one entry; keyed per-group folds keep the session's
+    ``spark.sql.shuffle.partitions``. The plan decides, and the session
+    conf is left as it was. Spark keeps the count in the checkpoint's
+    offset log, so a checkpoint created with another count restarts
+    with that count and its state.
+
     Returns {name: (output_stream_reader, StreamingQuery, spool_dir)}:
     drive with query.processAllAvailable() in topo order (tests) or
     let the triggers run; read a function's live output by re-reading
@@ -145,12 +187,6 @@ def deploy_program_streaming(
     """
     import os
     import posixpath
-
-    from ramen_spark.plans.raql import (
-        _needs_fold_engine,
-        compile_commit_streaming,
-        compile_operation,
-    )
 
     from ramen_spark.plans.raql import ReadCsv, _spark_type_of_csv_field
 
@@ -226,20 +262,10 @@ def deploy_program_streaming(
                 F.col("tick").alias("_tick"),
                 F.col("t").cast("double").alias("_now"),
             )
-            compiled = _compile_fn(fn.op, clock, params, ["_tick"])
-            spool = os.path.join(work_dir, prog.name, name)
-            os.makedirs(spool, exist_ok=True)
-            q = (
-                compiled.writeStream.format("parquet")
-                .option("path", spool)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(work_dir, "_ckpt", prog.name, name),
-                )
-                .outputMode("append")
-                .start()
+            out[name] = _start_spooled(
+                spark, *_compile_fn(fn.op, clock, params, ["_tick"]),
+                work_dir, prog.name, name,
             )
-            out[name] = (compiled, q, spool)
             continue
         parents: list[DataFrame] = []
         for parent in fn.parents:
@@ -316,19 +342,8 @@ def deploy_program_streaming(
                 # order within each micro-batch — the reference's
                 # ringbuf consumption order
                 oc = []
-        compiled = _compile_fn(fn.op, src, params, oc)
-
-        spool = os.path.join(work_dir, prog.name, name)
-        os.makedirs(spool, exist_ok=True)
-        q = (
-            compiled.writeStream.format("parquet")
-            .option("path", spool)
-            .option(
-                "checkpointLocation",
-                os.path.join(work_dir, "_ckpt", prog.name, name),
-            )
-            .outputMode("append")
-            .start()
+        out[name] = _start_spooled(
+            spark, *_compile_fn(fn.op, src, params, oc),
+            work_dir, prog.name, name,
         )
-        out[name] = (compiled, q, spool)
     return out

@@ -7,8 +7,10 @@ aggregate plus the last committed output (RaQL's ``previous``); each
 micro-batch folds its rows in event-order and emits the committed
 tuples. State lives in the state store (RocksDB per session.py) —
 bounded by live groups, exactly like the reference's group hashtable
-(src/CodeGenLib_Skeletons.ml:717-760) but partitioned across
-executors.
+(src/CodeGenLib_Skeletons.ml:717-760). Keyed per-group state is
+partitioned across executors; the worker mode (and a fold with no
+GROUP BY) keeps one constant key, so the runner starts its query with
+one state partition.
 
 Caveat (documented): ordering is guaranteed WITHIN a micro-batch by
 the explicit sort; cross-batch reordering beyond the watermark is the
@@ -212,6 +214,11 @@ class WorkerFold:
     does (src/CodeGenLib_Skeletons.ml:678-695), unless
     ``keep_flushed``: the operation reads its last output (previous
     namespaces), keeps state (KEEP), or keeps other per-group state.
+
+    Rows fold one at a time, tied rows in arrival order, so with ties
+    in the order column this fold and the batch ``commit_aggregate``
+    (which places other groups' triggers by comparing order values)
+    can commit different windows (documented divergence).
     """
 
     def __init__(
@@ -379,6 +386,13 @@ def streaming_commit_worker(
     by the term's out-side says may fire; otherwise (``in.m <> out.m``)
     it scans every live group. Flushed groups leave the hashtable
     unless ``keep_flushed``.
+
+    The constant key ``_w`` means the state is one entry in one
+    partition: ``runner.deploy_program_streaming`` starts this query
+    with one state partition instead of the session's
+    ``spark.sql.shuffle.partitions``. A checkpoint created with
+    another count keeps it (Spark restores the count from the offset
+    log).
 
     ``order_col`` None ⇒ arrival order within each micro-batch.
     """

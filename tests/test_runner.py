@@ -269,3 +269,135 @@ DEFINE doubled AS
         for _, q, _ in deployed.values():
             if q is not None:
                 q.stop()
+
+
+# ---------------------------------------------------------------------------
+# state partitions of the always-on queries
+# ---------------------------------------------------------------------------
+
+# ``win`` is check-all (worker mode, cond0 heap); its aggregate
+# conjunct also sends batch materialize to the COMMIT engine, which
+# run-to-completion grouping would bypass. ``total`` folds with no
+# GROUP BY, ``per_k`` per group.
+STATE_PROG = """
+DEFINE win AS
+  SELECT min ts AS t0, max ts AS t1, k, count 1 AS n, sum v AS s
+  FROM src
+  GROUP BY k
+  COMMIT AFTER in.ts > out.t0 + 6 AND count 1 >= 2;
+
+DEFINE total AS
+  SELECT min ts AS t0, count 1 AS n, sum v AS s
+  FROM src
+  COMMIT AFTER sum 1 >= 4;
+
+DEFINE per_k AS
+  SELECT k, min ts AS t0, count 1 AS n, sum v AS s
+  FROM src
+  GROUP BY k
+  COMMIT AFTER sum 1 >= 3;
+"""
+
+
+def _state_rows(lo: int, hi: int) -> list[tuple]:
+    # unique ts: the batch and worker folds agree only without ties
+    return [(float(i), "abc"[i * 7 % 3], float(i % 5)) for i in range(lo, hi)]
+
+
+def _state_partitions(q) -> int:
+    return q.recentProgress[-1].stateOperators[0].numShufflePartitions
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _expected(spark, prog, src_dir) -> dict[str, list[tuple]]:
+    batch = prog.materialize(
+        spark, externals={"src": spark.read.parquet(src_dir)},
+        register_views=False,
+    )
+    return {fn: _sorted_rows(batch[fn]) for fn in prog.functions}
+
+
+def test_constant_key_folds_start_with_one_state_partition(spark, tmp_path):
+    """Check-all worker mode and the no-GROUP-BY fold keep their state
+    under one constant key, so their queries start with one state
+    partition; a keyed per-group fold keeps the session's count. The
+    session conf is the same after the deploy, and every spool equals
+    the batch materialization."""
+    from ramen_spark.runner import deploy_program_streaming
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    prog = compile_program(STATE_PROG, name="parts")
+    src_dir = str(tmp_path / "src")
+    spark.createDataFrame(_state_rows(0, 40), "ts double, k string, v double") \
+        .coalesce(1).write.parquet(src_dir)
+    stream = spark.readStream.schema("ts double, k string, v double").parquet(src_dir)
+    deployed = deploy_program_streaming(
+        spark, prog, str(tmp_path / "work"), {"src": stream}
+    )
+    try:
+        assert spark.conf.get(key) == before
+        got, parts = {}, {}
+        for fn in ("win", "total", "per_k"):
+            q = deployed[fn][1]
+            q.processAllAvailable()
+            parts[fn] = _state_partitions(q)
+            got[fn] = _sorted_rows(spark.read.parquet(deployed[fn][2]))
+    finally:
+        for _, q, _ in deployed.values():
+            q.stop()
+    assert parts == {"win": 1, "total": 1, "per_k": int(before)}
+    exp = _expected(spark, prog, src_dir)
+    assert all(exp.values()) and got == exp
+
+
+def test_existing_checkpoint_keeps_its_state_partitions(spark, tmp_path):
+    """A worker-mode checkpoint created with the session's count (as
+    every deploy did before constant-key queries took one partition)
+    restarts through the runner with that count, and its state carries
+    over: the output over both input files equals batch."""
+    import os
+
+    from ramen_spark.plans.raql import compile_commit_streaming
+    from ramen_spark.runner import deploy_program_streaming
+
+    schema = "ts double, k string, v double"
+    prog = compile_program(STATE_PROG.split("DEFINE total")[0], name="old")
+    src_dir = str(tmp_path / "src")
+    spark.createDataFrame(_state_rows(0, 20), schema).coalesce(1) \
+        .write.parquet(src_dir)
+    stream = spark.readStream.schema(schema).parquet(src_dir)
+    work = str(tmp_path / "work")
+    q = (
+        compile_commit_streaming(prog.functions["win"].op, stream, order_cols=["ts"])
+        .writeStream.format("parquet")
+        .option("path", os.path.join(work, "old", "win"))
+        .option("checkpointLocation", os.path.join(work, "_ckpt", "old", "win"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        count = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert _state_partitions(q) == count
+    finally:
+        q.stop()
+
+    spark.createDataFrame(_state_rows(20, 40), schema).coalesce(1) \
+        .write.mode("append").parquet(src_dir)
+    deployed = deploy_program_streaming(spark, prog, work, {"src": stream})
+    q = deployed["win"][1]
+    try:
+        q.processAllAvailable()
+        assert q.recentProgress[-1].numInputRows == 20
+        assert _state_partitions(q) == count
+        got = _sorted_rows(spark.read.parquet(deployed["win"][2]))
+    finally:
+        q.stop()
+    exp = _expected(spark, prog, src_dir)["win"]
+    # a window that opened in the first file commits in the second
+    assert any(t0 < 20 <= t1 for t0, t1, *_ in exp)
+    assert got == exp
