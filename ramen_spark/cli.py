@@ -573,20 +573,22 @@ def cmd_drift(args) -> int:
     (operators/sketch.py:sketch_drift): per key, percentile deltas
     (distribution shift) + KMV cardinality / Jaccard / containment
     over the row-id sets (membership churn). STATE_A / STATE_B are
-    _SnapshotStore roots written by IncrementalQuantileSketch (or any
+    BatchStore roots written by IncrementalQuantileSketch (or any
     quantile_prune-shaped parquet relation) — neither corpus is
     re-read; the report joins two few-KB sketches."""
     from ramen_spark.operators.sketch import sketch_drift
     from ramen_spark.session import get_spark
-    from ramen_spark.streaming.sketch import _SnapshotStore
+    from ramen_spark.streaming.publish import BatchStore
 
     spark = get_spark("ramen_cli")
 
-    def load_state(root: str):
-        st = _SnapshotStore(spark, root).read()
+    def load_state(root: str, name: str = "state"):
+        st = BatchStore(spark, root).latest(name)
         if st is None:
-            # plain parquet relation (a batch quantile_prune dump)
-            st = spark.read.parquet(root)
+            # plain parquet relation: a batch quantile_prune dump, or
+            # the cells/cands dumps under it for --cms-top
+            plain = root if name == "state" else f"{root.rstrip('/')}/{name}"
+            st = spark.read.parquet(plain)
         return st
 
     keys = args.by or []
@@ -603,8 +605,8 @@ def cmd_drift(args) -> int:
 
         pairs, geometry = [], None
         for root in (args.state_a, args.state_b):
-            cells = load_state(root.rstrip("/") + "/cells")
-            cands = load_state(root.rstrip("/") + "/cands")
+            cells = load_state(root, "cells")
+            cands = load_state(root, "cands")
             if "_geo_depth" in cells.columns:
                 # round-12 states stamp their build geometry — trust
                 # it over the flags and require both sides to agree
@@ -992,8 +994,8 @@ def build_parser() -> argparse.ArgumentParser:
         "drift",
         help="corpus drift report from two persisted sketch states",
     )
-    p.add_argument("state_a", help="_SnapshotStore root (or parquet) A")
-    p.add_argument("state_b", help="_SnapshotStore root (or parquet) B")
+    p.add_argument("state_a", help="BatchStore root (or parquet) A")
+    p.add_argument("state_b", help="BatchStore root (or parquet) B")
     p.add_argument(
         "--by", action="append", default=None,
         help="group-by key column (repeatable); omit for global",

@@ -426,7 +426,7 @@ def sketch_drift(
     the snapshot-over-snapshot observability report computed PURELY
     from two few-KB sketch relations, with neither corpus re-read
     (the always-on story the sketch family exists for: yesterday's
-    crawl vs today's, two _SnapshotStore roots in, one report out).
+    crawl vs today's, two BatchStore roots in, one report out).
 
     Inputs are quantile_prune-shaped states: (keys…, _h, _v[, _kmv_k])
     with _h = md5_48 of a UNIQUE row id. One state answers BOTH

@@ -5074,7 +5074,7 @@ def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a uniform sample, its hashes a KMV sketch of the id set. Neither
     corpus is re-read — the report joins two ≤ k-per-key relations
     (the `ramen drift` CLI reads the same function off two
-    _SnapshotStore roots). Oracle: both sketches replayed naively
+    BatchStore roots). Oracle: both sketches replayed naively
     (bottom-64 pairs per side, nearest-rank percentiles, union-sketch
     overlap algebra) — exact while under-full AND at saturation."""
     from ramen_spark.operators.sketch import quantile_prune, sketch_drift

@@ -273,7 +273,7 @@ def write_webdataset(
     renamed in, manifest replaced atomically, old generation deleted
     LAST) — a failed or interrupted re-export leaves the previous
     data + manifest fully intact, the same old-state-survives
-    protocol as the streaming lanes' _SnapshotStore.
+    protocol as the streaming lanes' BatchStore.
 
     100 TB shape: one hash Exchange on the shard id, then each shard
     streams through ONE applyInPandas task that writes its tar

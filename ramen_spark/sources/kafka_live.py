@@ -21,8 +21,8 @@ for that is the jar-gated path this module exists to avoid):
   assigned (topic, partition) from the last committed offset to the
   current high watermark, and stream decoded records straight into a
   parquet SPOOL batch — records never visit the driver.
-* Offsets are checkpointed in a versioned ``_SnapshotStore``
-  (``<root>/offsets``) AFTER the spool write succeeds. Crash between
+* Offsets are checkpointed in a versioned ``BatchStore``
+  (``streaming/publish.py``, ``<root>/offsets``) AFTER the spool write succeeds. Crash between
   spool write and offset commit ⇒ the next poll finds the offsets
   version unchanged, DELETES the orphan batch dir and re-fetches:
   at-least-once against the broker, duplicate-free in the spool (the
@@ -73,7 +73,7 @@ class KafkaLiveSource:
         client_id: str = "ramen-spark",
         timeout_s: float = 10.0,
     ) -> None:
-        from ramen_spark.streaming.sketch import _SnapshotStore
+        from ramen_spark.streaming.publish import BatchStore
 
         if not assignments:
             raise ValueError("KafkaLiveSource needs at least one assignment")
@@ -90,14 +90,14 @@ class KafkaLiveSource:
         self.max_records = max_records
         self.client_id = client_id
         self.timeout_s = timeout_s
-        self.offsets_store = _SnapshotStore(spark, self.root_dir + "/offsets")
+        self.offsets_store = BatchStore(spark, self.root_dir + "/offsets")
 
     # -- offsets ----------------------------------------------------------
 
     def committed_offsets(self) -> dict[tuple[str, int], int]:
         """{(topic, partition): next offset to fetch} from the
         checkpoint — empty before the first successful poll."""
-        state = self.offsets_store.read()
+        state = self.offsets_store.latest("offsets")
         if state is None:
             return {}
         return {
@@ -201,12 +201,11 @@ class KafkaLiveSource:
         next_offsets.update(
             {tp: ends.get(tp, off) for tp, off in starts.items()}
         )
-        self.offsets_store.commit(
-            self.spark.createDataFrame(
-                [(t, p, off) for (t, p), off in sorted(next_offsets.items())],
-                "topic string, partition int, next_offset long",
-            ).coalesce(1)
-        )
+        offsets = self.spark.createDataFrame(
+            [(t, p, off) for (t, p), off in sorted(next_offsets.items())],
+            "topic string, partition int, next_offset long",
+        ).coalesce(1)
+        self.offsets_store.publish(None, lambda: {"offsets": offsets})
         return batch
 
     # -- the durable log --------------------------------------------------
@@ -242,9 +241,9 @@ class KafkaLiveSource:
         # reap crash leftovers first: unlisted compacting-* staging
         # dirs, and anything a live span already shadows (a compact
         # that crashed between publish and cleanup)
-        from ramen_spark.streaming.sketch import _fs
+        from ramen_spark.streaming.publish import hadoop_fs
 
-        fs, rp = _fs(self.spark, self.root_dir + "/spool")
+        fs, rp = hadoop_fs(self.spark, self.root_dir + "/spool")
         if fs.exists(rp):
             effective = set(self._spool_dirs())
             for st in fs.listStatus(rp):
@@ -275,7 +274,7 @@ class KafkaLiveSource:
         self.spark.read.parquet(*[p for _a, _b, p in merged]).coalesce(
             max(1, min(len(merged) // 8, 32))
         ).write.mode("overwrite").parquet(staging)
-        _fs2, sp = _fs(self.spark, staging)
+        _fs2, sp = hadoop_fs(self.spark, staging)
         ok = _fs2.rename(
             sp,
             self.spark._jvm.org.apache.hadoop.fs.Path(
@@ -298,9 +297,9 @@ class KafkaLiveSource:
         """Raw spool listing → (spans [(a, b, path)], plains
         [(version, path)]). ``compacting-*`` staging dirs are invisible
         by design (crash leftovers; reaped by the next compact)."""
-        from ramen_spark.streaming.sketch import _fs
+        from ramen_spark.streaming.publish import hadoop_fs
 
-        fs, rp = _fs(self.spark, self.root_dir + "/spool")
+        fs, rp = hadoop_fs(self.spark, self.root_dir + "/spool")
         spans: list[tuple[int, int, str]] = []
         plains: list[tuple[int, str]] = []
         if not fs.exists(rp):
@@ -327,9 +326,9 @@ class KafkaLiveSource:
         return _effective_spool(spans, plains)
 
     def _delete_dir(self, path: str) -> None:
-        from ramen_spark.streaming.sketch import _fs
+        from ramen_spark.streaming.publish import hadoop_fs
 
-        fs, p = _fs(self.spark, path)
+        fs, p = hadoop_fs(self.spark, path)
         if fs.exists(p):
             fs.delete(p, True)
 

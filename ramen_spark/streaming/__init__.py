@@ -11,4 +11,6 @@ incrementally:
                  processor (applyInPandasWithState).
 - ``sources``  : EVERY-clock (rate source), file-glob tail.
 - ``sinks``    : NOTIFY-style foreachBatch sinks, memory/console tail.
+- ``publish``  : the one replay-safe publish step of the file-writing
+                 foreachBatch lanes (``dedup``, ``sketch``).
 """

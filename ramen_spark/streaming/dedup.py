@@ -9,12 +9,15 @@ index accretes one append per batch, and every batch emits its
 near-dup pairs against everything that arrived before it (plus any
 seeded retained corpus).
 
-Exactness: per batch we append the batch's bands/signatures to the
-index FIRST, then probe the batch against the full index, keeping a
-candidate unless its partner sits in the same batch with the larger
-id (same-batch pairs emit once, pairs against anything indexed
-earlier always emit — ids carry no arrival-order guarantee). Over any
-batch split of a corpus the union of emissions equals the BATCH
+Exactness: per batch we probe the batch against the published index
+PLUS the batch's own rows, keeping a candidate unless its partner sits
+in the same batch with the larger id (same-batch pairs emit once,
+pairs against anything indexed earlier always emit — ids carry no
+arrival-order guarantee). The batch's index rows and its pairs are
+then published as ONE ``streaming/publish.py`` ``BatchStore`` version
+under the index directory, so a crashed and replayed micro-batch
+writes neither twice (read the pairs with ``BatchStore.union``). Over
+any batch split of a corpus the union of emissions equals the BATCH
 operator ``minhash_lsh_pairs`` on the whole corpus as an unordered
 pair set, hash for hash; seeded with a retained corpus, it equals
 ``minhash_lsh_pairs_between(stream, seed)`` plus the stream's own
@@ -27,20 +30,20 @@ equi-join of the SMALL batch against the index; on a real deployment
 the index lives bucket-partitioned (or as a bucketed table,
 sources/bucketed.py) so the probe prunes to the buckets the batch
 touches instead of re-scanning the index — the append-only layout
-here keeps files immutable, so partition pruning composes with it.
+here keeps files immutable (one directory per batch), so partition
+pruning composes with it.
 Signature re-attach joins are id-keyed; the batch side is broadcast-
 sized by construction (one micro-batch).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ramen_spark.operators.dedup import minhash_signatures
 from ramen_spark.functions import text as Tx
+from ramen_spark.streaming.publish import BatchStore, start_lane
 
 
 def _banded(
@@ -54,11 +57,75 @@ def _banded(
     )
 
 
-class IncrementalDedupIndex:
-    """The persisted banded index: ``<dir>/bands`` (bucket, doc_id)
-    and ``<dir>/sigs`` (doc_id, sig) as append-only parquet. Seed it
-    with a retained corpus via :meth:`append`, then let the streaming
-    lane append each micro-batch."""
+class _IncrementalIndex:
+    """A persisted near-dup index: an append-log BatchStore under
+    ``index_dir`` whose versions each hold one batch's index relations
+    (``_index``) and, for a stream batch, its near-dup ``pairs``.
+    Subclasses give ``_prepared`` (docs → the rows the index is built
+    from), ``_index`` and ``probe``."""
+
+    def __init__(self, spark: SparkSession, index_dir: str, id_col: str):
+        self.id_col = id_col
+        self.store = BatchStore(spark, index_dir, append=True)
+
+    def _materialized(self, docs: DataFrame) -> DataFrame:
+        # ONCE: the prepared rows feed every index write and the probe
+        return self._prepared(docs).localCheckpoint(eager=True)
+
+    def append(self, docs: DataFrame) -> None:
+        """Index a seed corpus (e.g. the retained crawl): published
+        with no batch id, so it never marks a stream batch done."""
+        self.store.publish(None, lambda: self._index(self._materialized(docs)))
+
+    def update(self, batch_df: DataFrame, batch_id: int, threshold: float):
+        """Fold one micro-batch: its index rows and its pairs against
+        everything indexed before it, published together."""
+
+        def outputs() -> dict[str, DataFrame]:
+            prepared = self._materialized(batch_df)
+            pairs = self.probe(prepared, threshold)
+            return {**self._index(prepared), "pairs": pairs}
+
+        self.store.publish(batch_id, outputs)
+
+    def _with_batch(self, prepared: DataFrame) -> dict[str, DataFrame]:
+        """Each index relation as published PLUS the batch's own rows:
+        the probe must see its own batch, which publishes with it."""
+        out = {}
+        for name, rows in self._index(prepared).items():
+            done = self.store.union(name)
+            out[name] = rows if done is None else done.unionByName(rows)
+        return out
+
+    def _single_emission(self, cand: DataFrame, prepared: DataFrame):
+        """Distinct (id_new, id_old, …) candidates, minus those whose
+        partner is in the SAME batch with ``id_old >= id_new``:
+        same-batch unordered pairs emit exactly once (and self-pairs
+        never), while pairs against earlier arrivals always emit,
+        regardless of id order (doc ids carry no arrival-order
+        guarantee — a seeded retained corpus can hold ids above the
+        stream's)."""
+        in_batch = prepared.select(
+            F.col(self.id_col).alias("id_old"), F.lit(True).alias("_in_batch")
+        )
+        return (
+            cand.dropDuplicates(["id_new", "id_old"])
+            .join(in_batch, "id_old", "left")
+            .filter(
+                ~(
+                    F.coalesce(F.col("_in_batch"), F.lit(False))
+                    & (F.col("id_old") >= F.col("id_new"))
+                )
+            )
+            .drop("_in_batch")
+        )
+
+
+class IncrementalDedupIndex(_IncrementalIndex):
+    """The persisted banded index: ``bands`` (bucket, doc_id) and
+    ``sigs`` (doc_id, sig) in an append-log BatchStore. Seed it with a
+    retained corpus via :meth:`append`, then let the streaming lane
+    fold each micro-batch."""
 
     def __init__(
         self,
@@ -72,18 +139,14 @@ class IncrementalDedupIndex:
     ) -> None:
         if num_hashes % bands:
             raise ValueError("bands must divide num_hashes")
-        self.spark = spark
-        self.index_dir = index_dir
+        super().__init__(spark, index_dir, id_col)
         self.text_col = text_col
-        self.id_col = id_col
         self.shingle_k = shingle_k
         self.num_hashes = num_hashes
         self.bands = bands
         self.rows_per_band = num_hashes // bands
-        self._bands_dir = os.path.join(index_dir, "bands")
-        self._sigs_dir = os.path.join(index_dir, "sigs")
 
-    def _signatures(self, docs: DataFrame) -> DataFrame:
+    def _prepared(self, docs: DataFrame) -> DataFrame:
         return minhash_signatures(
             docs,
             self.text_col,
@@ -92,55 +155,27 @@ class IncrementalDedupIndex:
             self.num_hashes,
         )
 
-    def append(self, docs: DataFrame) -> DataFrame:
-        """Index ``docs`` (seed corpus or one micro-batch): append
-        their bands and signatures. Returns the batch's signature
-        relation (materialized) so the caller can reuse it for the
-        probe without recomputing shingles."""
-        # materialize ONCE: the signatures feed the bands write, the
-        # sigs write, and the caller's probe — without the checkpoint
-        # the shingle+minhash computation would run three times
-        sigs = self._signatures(docs).localCheckpoint(eager=True)
-        _banded(sigs, self.id_col, self.bands, self.rows_per_band).write.mode(
-            "append"
-        ).parquet(self._bands_dir)
-        sigs.write.mode("append").parquet(self._sigs_dir)
-        return sigs
+    def _index(self, sigs: DataFrame) -> dict[str, DataFrame]:
+        return {
+            "bands": _banded(sigs, self.id_col, self.bands, self.rows_per_band),
+            "sigs": sigs,
+        }
 
     def probe(self, batch_sigs: DataFrame, min_sig_agreement: float) -> DataFrame:
-        """Near-dup pairs of the batch against the WHOLE index (which
-        already includes the batch). Single-emission rule: a candidate
-        is kept unless its partner is in the SAME batch with
-        ``id_old >= id_new`` — same-batch unordered pairs emit exactly
-        once (and self-pairs never), while pairs against earlier
-        arrivals always emit, regardless of id order (doc ids carry no
-        arrival-order guarantee — a seeded retained corpus can hold
-        ids above the stream's)."""
-        idx_bands = self.spark.read.parquet(self._bands_dir)
-        idx_sigs = self.spark.read.parquet(self._sigs_dir)
+        """Near-dup pairs of the batch against the WHOLE index, the
+        batch included, under the single-emission rule."""
+        idx = self._with_batch(batch_sigs)
         batch_bands = _banded(
             batch_sigs, self.id_col, self.bands, self.rows_per_band
         ).select(F.col(self.id_col).alias("id_new"), "bucket")
-        in_batch = batch_sigs.select(
-            F.col(self.id_col).alias("id_old"), F.lit(True).alias("_in_batch")
-        )
-        cand = (
+        cand = self._single_emission(
             batch_bands.join(
-                idx_bands.select(
+                idx["bands"].select(
                     F.col(self.id_col).alias("id_old"), "bucket"
                 ),
                 "bucket",
-            )
-            .select("id_new", "id_old")
-            .dropDuplicates(["id_new", "id_old"])
-            .join(in_batch, "id_old", "left")
-            .filter(
-                ~(
-                    F.coalesce(F.col("_in_batch"), F.lit(False))
-                    & (F.col("id_old") >= F.col("id_new"))
-                )
-            )
-            .select("id_new", "id_old")
+            ).select("id_new", "id_old"),
+            batch_sigs,
         )
         pairs = cand.join(
             batch_sigs.select(
@@ -149,7 +184,7 @@ class IncrementalDedupIndex:
             ),
             "id_new",
         ).join(
-            idx_sigs.select(
+            idx["sigs"].select(
                 F.col(self.id_col).alias("id_old"),
                 F.col("sig").alias("sig_old"),
             ),
@@ -213,7 +248,8 @@ def decontaminate_stream(
 ):
     """Always-on train/eval decontamination: each micro-batch of
     training documents is flagged against the eval corpus and the
-    per-doc report appended to ``pairs_dir``. The eval side's distinct
+    per-doc report published as the ``report`` output of an
+    append-log BatchStore at ``pairs_dir``. The eval side's distinct
     shingle set is computed and materialized ONCE at query start (it
     is static), so per-batch cost is the batch's own shingling plus
     the broadcast-able shingle join — not a re-shingle of the eval
@@ -239,27 +275,20 @@ def decontaminate_stream(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        decontaminate(
-            batch_df,
-            eval_df=None,
-            text_col=text_col,
-            id_col=id_col,
-            shingle_k=shingle_k,
-            min_overlap=min_overlap,
+        report = decontaminate(
+            batch_df, None, text_col, id_col, shingle_k, min_overlap,
             eval_shingles=eval_shingles,
-        ).write.mode("append").parquet(pairs_dir)
+        )
+        BatchStore(batch_df.sparkSession, pairs_dir, append=True).publish(
+            batch_id, lambda: {"report": report}
+        )
 
-    return (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_lane(doc_stream, checkpoint_dir, process)
 
 
 def incremental_dedup_stream(
     doc_stream: DataFrame,
     index_dir: str,
-    pairs_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -269,48 +298,37 @@ def incremental_dedup_stream(
     min_sig_agreement: float = 0.5,
 ):
     """Run the incremental dedup always-on: each micro-batch of
-    ``doc_stream`` is indexed, probed, and its near-dup pairs appended
-    to ``pairs_dir``. Returns the started StreamingQuery.
+    ``doc_stream`` is indexed and probed, and its near-dup pairs are
+    published with its index rows (read them with
+    ``BatchStore(spark, index_dir).union("pairs")``). Returns the
+    started StreamingQuery.
 
-    foreachBatch rather than a stateful operator on purpose: the
+    A publish lane rather than a stateful operator on purpose: the
     banded index must outlive the query (it IS the product — the
     snapshot index the batch operators join against), must be readable
     by concurrent batch jobs, and grows unbounded — none of which fits
-    the state store. The checkpoint makes batch replays idempotent
-    only if the sink dedupes; parquet append does not, so a crashed
-    batch can re-emit its pairs on restart — downstream consumers of
-    ``pairs_dir`` should read with dropDuplicates([id_new, id_old])
-    (exactly-once needs a transactional table format underneath)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        index = IncrementalDedupIndex(
-            spark,
+    the state store."""
+    return start_lane(
+        doc_stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalDedupIndex(
+            df.sparkSession,
             index_dir,
             text_col=text_col,
             id_col=id_col,
             shingle_k=shingle_k,
             num_hashes=num_hashes,
             bands=bands,
-        )
-        sigs = index.append(batch_df)  # materialized inside append
-        index.probe(sigs, min_sig_agreement).write.mode("append").parquet(
-            pairs_dir
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ).update(df, b, min_sig_agreement),
     )
 
 
-class IncrementalVectorIndex:
+class IncrementalVectorIndex(_IncrementalIndex):
     """The embedding twin of :class:`IncrementalDedupIndex`: a
-    persisted hyperplane-bucket index — ``<dir>/buckets``
-    (bucket, vec_id) and ``<dir>/vecs`` (vec_id, _v, _n) as
-    append-only parquet. The planes are seeded at construction and
-    must stay FIXED for the index lifetime (a re-seeded probe would
+    persisted hyperplane-bucket index — ``buckets`` (bucket, vec_id)
+    and ``vecs`` (vec_id, _v, _n) in an append-log BatchStore. The
+    planes are seeded at construction and must stay FIXED for the
+    index lifetime (a re-seeded probe would
     bucket the same vector differently); occupancy therefore can't
     adapt to corpus growth the way batch pairwise_near_dups does —
     pick ``n_planes`` for the corpus you expect, or re-index.
@@ -332,13 +350,9 @@ class IncrementalVectorIndex:
     ) -> None:
         from ramen_spark.operators.similarity import make_hyperplanes
 
-        self.spark = spark
-        self.index_dir = index_dir
-        self.id_col = id_col
+        super().__init__(spark, index_dir, id_col)
         self.vec_col = vec_col
         self.planes = make_hyperplanes(dim, n_planes, seed)
-        self._buckets_dir = os.path.join(index_dir, "buckets")
-        self._vecs_dir = os.path.join(index_dir, "vecs")
 
     def _prepared(self, vecs: DataFrame) -> DataFrame:
         from ramen_spark.functions import vectors as V
@@ -350,47 +364,29 @@ class IncrementalVectorIndex:
             V.lsh_bucket(F.col(self.vec_col), self.planes).alias("bucket"),
         ).withColumn("_n", V.norm2(F.col("_v")))
 
-    def append(self, vecs: DataFrame) -> DataFrame:
-        """Index ``vecs`` (seed corpus or one micro-batch); returns
-        the prepared batch relation (materialized once — it feeds
-        both index writes and the caller's probe)."""
-        prepared = self._prepared(vecs).localCheckpoint(eager=True)
-        prepared.select("bucket", self.id_col).write.mode("append").parquet(
-            self._buckets_dir
-        )
-        prepared.select(self.id_col, "_v", "_n").write.mode("append").parquet(
-            self._vecs_dir
-        )
-        return prepared
+    def _index(self, prepared: DataFrame) -> dict[str, DataFrame]:
+        return {
+            "buckets": prepared.select("bucket", self.id_col),
+            "vecs": prepared.select(self.id_col, "_v", "_n"),
+        }
 
     def probe(self, batch: DataFrame, threshold: float) -> DataFrame:
         """Exact-cosine near-dup pairs of the batch against the whole
-        index (which already includes the batch), same single-emission
-        rule as the text lane: same-batch partners emit only from the
-        smaller id's perspective; earlier arrivals always emit."""
+        index, the batch included, under the text lane's
+        single-emission rule."""
         from ramen_spark.operators.similarity import _sim_prenorm
 
-        idx_b = self.spark.read.parquet(self._buckets_dir)
-        idx_v = self.spark.read.parquet(self._vecs_dir)
-        in_batch = batch.select(
-            F.col(self.id_col).alias("id_old"), F.lit(True).alias("_in_batch")
-        )
-        cand = (
+        idx = self._with_batch(batch)
+        cand = self._single_emission(
             batch.select(F.col(self.id_col).alias("id_new"), "bucket")
             .join(
-                idx_b.select(F.col(self.id_col).alias("id_old"), "bucket"),
+                idx["buckets"].select(
+                    F.col(self.id_col).alias("id_old"), "bucket"
+                ),
                 "bucket",
             )
-            .select("id_new", "id_old")
-            .dropDuplicates(["id_new", "id_old"])
-            .join(in_batch, "id_old", "left")
-            .filter(
-                ~(
-                    F.coalesce(F.col("_in_batch"), F.lit(False))
-                    & (F.col("id_old") >= F.col("id_new"))
-                )
-            )
-            .select("id_new", "id_old")
+            .select("id_new", "id_old"),
+            batch,
         )
         pairs = cand.join(
             batch.select(
@@ -400,7 +396,7 @@ class IncrementalVectorIndex:
             ),
             "id_new",
         ).join(
-            idx_v.select(
+            idx["vecs"].select(
                 F.col(self.id_col).alias("id_old"),
                 F.col("_v").alias("_ov"),
                 F.col("_n").alias("_on"),
@@ -416,7 +412,7 @@ class IncrementalVectorIndex:
         )
 
 
-class IncrementalSemanticIndex:
+class IncrementalSemanticIndex(_IncrementalIndex):
     """The SemDeDup twin of :class:`IncrementalVectorIndex` (round-7
     verdict #9): a persisted (cell, bucket) index keyed exactly like
     ``semantic_dedup``'s scale path — coarse-quantizer cell from FIXED
@@ -428,8 +424,8 @@ class IncrementalSemanticIndex:
     change them — at 100 TB the quantizer is versioned corpus
     metadata, not per-batch state).
 
-    ``<dir>/buckets`` holds (cell, bucket, vec_id); ``<dir>/vecs``
-    holds (vec_id, cell, centsim, _v, _n). Each probe is a
+    ``buckets`` holds (cell, bucket, vec_id); ``vecs`` holds (vec_id,
+    cell, centsim, _v, _n). Each probe is a
     (cell, bucket) equi-join of the SMALL batch against the index —
     partition-prunable when the index is stored bucketed by cell."""
 
@@ -446,14 +442,10 @@ class IncrementalSemanticIndex:
     ) -> None:
         from ramen_spark.operators.similarity import make_hyperplanes
 
-        self.spark = spark
-        self.index_dir = index_dir
+        super().__init__(spark, index_dir, id_col)
         self.centroids = centroids
         self.planes = make_hyperplanes(dim, n_planes, seed)
-        self.id_col = id_col
         self.vec_col = vec_col
-        self._buckets_dir = os.path.join(index_dir, "buckets")
-        self._vecs_dir = os.path.join(index_dir, "vecs")
 
     def _prepared(self, vecs: DataFrame) -> DataFrame:
         from ramen_spark.functions import vectors as V
@@ -486,47 +478,33 @@ class IncrementalSemanticIndex:
             )
         )
 
-    def append(self, vecs: DataFrame) -> DataFrame:
-        prepared = self._prepared(vecs).localCheckpoint(eager=True)
-        prepared.select("cell", "bucket", self.id_col).write.mode(
-            "append"
-        ).parquet(self._buckets_dir)
-        prepared.select(
-            self.id_col, "cell", "centsim", "_v", "_n"
-        ).write.mode("append").parquet(self._vecs_dir)
-        return prepared
+    def _index(self, prepared: DataFrame) -> dict[str, DataFrame]:
+        return {
+            "buckets": prepared.select("cell", "bucket", self.id_col),
+            "vecs": prepared.select(
+                self.id_col, "cell", "centsim", "_v", "_n"
+            ),
+        }
 
     def probe(self, batch: DataFrame, tau: float) -> DataFrame:
         """Same-(cell, bucket) cosine ≥ tau pairs of the batch against
-        the whole index (which already includes the batch), with the
-        single-emission rule of the other lanes. Emits BOTH centroid
-        similarities so the SemDeDup keep rule can be evaluated over
-        the cumulative pair set (``semantic_keep_from_pairs``)."""
+        the whole index, the batch included, with the single-emission
+        rule of the other lanes. Emits BOTH centroid similarities so
+        the SemDeDup keep rule can be evaluated over the cumulative
+        pair set (``semantic_keep_from_pairs``)."""
         from ramen_spark.operators.similarity import _sim_prenorm
 
-        idx_b = self.spark.read.parquet(self._buckets_dir)
-        idx_v = self.spark.read.parquet(self._vecs_dir)
-        in_batch = batch.select(
-            F.col(self.id_col).alias("id_old"), F.lit(True).alias("_in_batch")
-        )
-        cand = (
+        idx = self._with_batch(batch)
+        cand = self._single_emission(
             batch.select(F.col(self.id_col).alias("id_new"), "cell", "bucket")
             .join(
-                idx_b.select(
+                idx["buckets"].select(
                     F.col(self.id_col).alias("id_old"), "cell", "bucket"
                 ),
                 ["cell", "bucket"],
             )
-            .select("id_new", "id_old", "cell")
-            .dropDuplicates(["id_new", "id_old"])
-            .join(in_batch, "id_old", "left")
-            .filter(
-                ~(
-                    F.coalesce(F.col("_in_batch"), F.lit(False))
-                    & (F.col("id_old") >= F.col("id_new"))
-                )
-            )
-            .select("id_new", "id_old", "cell")
+            .select("id_new", "id_old", "cell"),
+            batch,
         )
         pairs = cand.join(
             batch.select(
@@ -537,7 +515,7 @@ class IncrementalSemanticIndex:
             ),
             "id_new",
         ).join(
-            idx_v.select(
+            idx["vecs"].select(
                 F.col(self.id_col).alias("id_old"),
                 F.col("centsim").alias("cs_old"),
                 F.col("_v").alias("_ov"),
@@ -562,9 +540,10 @@ def semantic_keep_from_pairs(
     (centsim asc, id asc) priority over it — exactly
     ``semantic_dedup``'s one-shot greedy prune, so on the same
     centroids/planes/tau the result matches the batch operator row
-    for row (the parity test's contract). ``index_vecs`` is the
-    lane's ``<dir>/vecs`` relation; only ids and two rounded doubles
-    ride the shuffle."""
+    for row (the parity test's contract). ``index_vecs`` and ``pairs``
+    are the lane's ``vecs`` and ``pairs`` logs
+    (``BatchStore.union``); only ids and two rounded doubles ride the
+    shuffle."""
     both = pairs.select(
         F.col("id_new").alias("_id"),
         F.col("cs_new").alias("_cs"),
@@ -600,7 +579,6 @@ def semantic_keep_from_pairs(
 def incremental_semantic_dedup_stream(
     vec_stream: DataFrame,
     index_dir: str,
-    pairs_dir: str,
     checkpoint_dir: str,
     centroids: list[list[float]],
     dim: int = 64,
@@ -612,16 +590,16 @@ def incremental_semantic_dedup_stream(
 ):
     """Always-on SemDeDup: each micro-batch of embeddings is assigned
     to its (fixed-quantizer) cell, indexed, probed against everything
-    that arrived before it, and its tau-pairs appended to
-    ``pairs_dir``; ``semantic_keep_from_pairs`` over the accumulated
-    pairs + index reproduces the batch ``semantic_dedup`` keep set on
-    the same centroids/planes (pinned by
-    test_streaming_semantic_dedup_equals_batch). Same foreachBatch /
-    idempotence caveats as the other lanes."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        index = IncrementalSemanticIndex(
-            batch_df.sparkSession,
+    that arrived before it, and its tau-pairs published with its index
+    rows; ``semantic_keep_from_pairs`` over the accumulated pairs +
+    index reproduces the batch ``semantic_dedup`` keep set on the same
+    centroids/planes (pinned by
+    test_streaming_semantic_dedup_equals_batch)."""
+    return start_lane(
+        vec_stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalSemanticIndex(
+            df.sparkSession,
             index_dir,
             centroids,
             dim=dim,
@@ -629,21 +607,13 @@ def incremental_semantic_dedup_stream(
             seed=seed,
             id_col=id_col,
             vec_col=vec_col,
-        )
-        prepared = index.append(batch_df)
-        index.probe(prepared, tau).write.mode("append").parquet(pairs_dir)
-
-    return (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ).update(df, b, tau),
     )
 
 
 def incremental_vector_dedup_stream(
     vec_stream: DataFrame,
     index_dir: str,
-    pairs_dir: str,
     checkpoint_dir: str,
     dim: int = 64,
     n_planes: int = 6,
@@ -654,28 +624,19 @@ def incremental_vector_dedup_stream(
 ):
     """Always-on embedding near-dup detection: each micro-batch of
     vectors is indexed, probed against everything that arrived before
-    it, and its pairs appended to ``pairs_dir``. Union of emissions
-    over any batch split == batch ``pairwise_near_dups`` with the same
-    planes, value for value (the parity test's contract). Same
-    foreachBatch/idempotence caveats as incremental_dedup_stream."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        index = IncrementalVectorIndex(
-            batch_df.sparkSession,
+    it, and its pairs published with its index rows. Union of
+    emissions over any batch split == batch ``pairwise_near_dups`` with
+    the same planes, value for value (the parity test's contract)."""
+    return start_lane(
+        vec_stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalVectorIndex(
+            df.sparkSession,
             index_dir,
             dim=dim,
             n_planes=n_planes,
             seed=seed,
             id_col=id_col,
             vec_col=vec_col,
-        )
-        prepared = index.append(batch_df)
-        index.probe(prepared, threshold).write.mode("append").parquet(
-            pairs_dir
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ).update(df, b, threshold),
     )

@@ -4,32 +4,10 @@ lanes (streaming/dedup.py): a persisted, batch-readable artifact that
 each micro-batch folds into, with N-batch ≡ batch parity pinned by
 test.
 
-State persistence (round-10 protocol — ``_SnapshotStore``):
-every lane's state lives as VERSIONED parquet snapshots
-``<root>/v1, v2, …`` with "highest version bearing Spark's _SUCCESS
-marker wins". A commit writes v(n+1) executor-side while v(n) is
-still being read (different directories — no overwrite-while-read
-hazard, no collect anywhere, exactly ONE job per commit), then
-best-effort-GCs older versions. There are NO renames and NO
-delete-then-rename swaps, so the protocol is crash-safe on object
-stores too (S3A rename is per-file copy+delete — any swap-based
-protocol has a corruption window there; a version directory either
-has its _SUCCESS marker or is ignored). Crash matrix: die mid-write
-→ v(n+1) has no _SUCCESS, v(n) stands, foreachBatch replays the
-batch; die after write, before GC → v(n+1) complete and adopted,
-the replayed batch is a no-op (min-k idempotence) or batch-id-
-skipped (CMS); die mid-GC → orphan old versions, removed at the
-next commit. The pre-round-10 flat layout (parquet directly under
-<root>) is read as the initial snapshot and cleaned after the first
-new commit.
-
-Replay semantics differ per sketch and are enforced here:
-- KMV is IDEMPOTENT under batch replay (min-k of a multiset ignores
-  duplicates) — a crashed-and-replayed micro-batch cannot corrupt it.
-- CMS is NOT (cell-wise sums double-count a replayed batch), so the
-  CMS state carries the last applied ``batch_id`` and ``update``
-  skips batches it has already folded in — exactly-once as long as
-  foreachBatch replays keep their batch ids (Spark's contract).
+Every lane's state is a snapshot in a ``streaming/publish.py``
+``BatchStore``: one executor-side write per fold, no collect at any
+state size, and a replayed micro-batch is skipped by its batch id (the
+crash matrix is in that module's docstring).
 """
 
 from __future__ import annotations
@@ -44,89 +22,7 @@ from ramen_spark.operators.sketch import (
     quantile_finalize,
     quantile_prune,
 )
-
-
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem for `path` — not os.path: the state dir of an
-    always-on lane lives wherever the cluster's storage is (s3://,
-    hdfs://, …); a local-only check would return False there and
-    silently RESET the accumulated sketch every micro-batch."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
-class _SnapshotStore:
-    """Versioned-snapshot persistence shared by every always-on
-    sketch lane (see module docstring for the crash matrix): commit =
-    one executor-side parquet write of ``<root>/v{n+1}`` + best-effort
-    GC; read = highest _SUCCESS-bearing version (legacy flat parquet
-    under ``<root>`` reads as the initial snapshot)."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
-        self.root = root.rstrip("/")
-
-    def _versions(self) -> list[int]:
-        fs, rp = _fs(self.spark, self.root)
-        if not fs.exists(rp):
-            return []
-        out = []
-        for st in fs.listStatus(rp):
-            nm = st.getPath().getName()
-            if st.isDirectory() and nm.startswith("v") and nm[1:].isdigit():
-                out.append(int(nm[1:]))
-        return sorted(out)
-
-    def _complete(self, n: int) -> bool:
-        return _dir_exists(self.spark, f"{self.root}/v{n}/_SUCCESS")
-
-    def current_version(self) -> int | None:
-        for n in reversed(self._versions()):
-            if self._complete(n):
-                return n
-        return None
-
-    def read(self) -> DataFrame | None:
-        n = self.current_version()
-        if n is not None:
-            return self.spark.read.parquet(f"{self.root}/v{n}")
-        if _dir_exists(self.spark, self.root + "/_SUCCESS"):
-            # legacy flat layout — the initial snapshot
-            return self.spark.read.parquet(self.root)
-        return None
-
-    def commit(self, df: DataFrame) -> str:
-        cur = self.current_version()
-        nxt = (cur + 1) if cur is not None else 1
-        # the write plan may read v{cur} (or the legacy flat files);
-        # the target is a DIFFERENT directory, so the source is never
-        # touched before the job completes
-        df.write.mode("overwrite").parquet(f"{self.root}/v{nxt}")
-        self._gc(keep=nxt)
-        return f"v{nxt}"
-
-    def _gc(self, keep: int) -> None:
-        try:
-            fs, rp = _fs(self.spark, self.root)
-            jvm = self.spark._jvm
-            for n in self._versions():
-                if n != keep:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{self.root}/v{n}"),
-                        True,
-                    )
-            # legacy flat files (pre-versioned layout) under the root
-            for st in fs.listStatus(rp):
-                if not st.isDirectory():
-                    fs.delete(st.getPath(), False)
-        except Exception:  # pragma: no cover — GC is best-effort
-            pass
+from ramen_spark.streaming.publish import BatchStore, start_lane
 
 
 def _merged_kmv_k() -> F.Column:
@@ -142,7 +38,20 @@ def _merged_kmv_k() -> F.Column:
     ).alias("_kmv_k")
 
 
-class _IncrementalMinKBase:
+class _SnapshotLane:
+    """A sketch lane: its state is a BatchStore snapshot under
+    ``state_dir`` that ``update`` folds one micro-batch into.
+    Subclasses give ``_fold`` (batch → {output name: DataFrame})."""
+
+    def __init__(self, spark: SparkSession, state_dir: str) -> None:
+        self.state_dir = state_dir.rstrip("/")
+        self.store = BatchStore(spark, self.state_dir)
+
+    def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
+        self.store.publish(batch_id, lambda: self._fold(batch_df))
+
+
+class _IncrementalMinKBase(_SnapshotLane):
     """Shared fold machinery for min-k-shaped persisted sketches
     (KMV distinct, bottom-k quantile sample): a micro-batch is pruned,
     unioned with the persisted state, re-pruned to the bound, and
@@ -150,30 +59,13 @@ class _IncrementalMinKBase:
     associative, commutative, and IDEMPOTENT — any batch split and
     any replay yields the state of the concatenated input.
 
-    Persistence is the versioned _SnapshotStore: one executor-side
-    write per commit, NO collect at any state size (state is ≤ k rows
-    per key but the number of KEYS is unbounded — a per-URL-host
-    sketch at 10M hosts × k=64 must never visit the driver).
-    ``driver_state_max_rows`` is accepted for API compatibility and
-    ignored: the old small-state driver round-trip had a crash window
-    (overwrite deletes the only copy before rewriting it) that the
-    snapshot protocol closes for every size at the same cost.
+    Persistence is a BatchStore snapshot: one executor-side write per
+    fold, NO collect at any state size (state is ≤ k rows per key but
+    the number of KEYS is unbounded — a per-URL-host sketch at 10M
+    hosts × k=64 must never visit the driver).
 
     Subclasses provide ``_prune_batch`` (micro-batch → sketch rows)
     and ``_reprune`` (merged sketch rows → re-bounded sketch rows)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        driver_state_max_rows: int = 100_000,
-    ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir
-        self.store = _SnapshotStore(spark, state_dir)
-        # instrumentation: always 'distributed' under the snapshot
-        # protocol (kept because operators/tests read it)
-        self.last_commit_path: str | None = None
 
     def _prune_batch(self, batch_df: DataFrame) -> DataFrame:
         raise NotImplementedError
@@ -182,13 +74,13 @@ class _IncrementalMinKBase:
         raise NotImplementedError
 
     def _state(self) -> DataFrame | None:
-        return self.store.read()
+        return self.store.latest("state")
 
     def _check_state_compat(self, state: DataFrame) -> None:
         """Hook: subclasses veto resuming from an incompatible
         persisted state (loudly, before any union)."""
 
-    def update(self, batch_df: DataFrame) -> None:
+    def _fold(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         pruned = self._prune_batch(batch_df)
         state = self._state()
         if state is not None:
@@ -201,15 +93,14 @@ class _IncrementalMinKBase:
             if state is None
             else state.unionByName(pruned, allowMissingColumns=True)
         )
-        self.store.commit(self._reprune(merged))
-        self.last_commit_path = "distributed"
+        return {"state": self._reprune(merged)}
 
 
 class IncrementalKmvSketch(_IncrementalMinKBase):
     """Persisted KMV distinct sketch: ``state_dir`` holds the pruned
     (keys…, _h) rows — ≤ k per key. ``estimate`` finalizes to
     (keys…, n_kept, kth_min, est_distinct), identical to batch
-    ``kmv_distinct`` over everything seen. Commit regimes: see
+    ``kmv_distinct`` over everything seen. Persistence: see
     :class:`_IncrementalMinKBase`."""
 
     def __init__(
@@ -219,11 +110,10 @@ class IncrementalKmvSketch(_IncrementalMinKBase):
         keys: list[str],
         value_col: str,
         k: int = 64,
-        driver_state_max_rows: int = 100_000,
     ) -> None:
         if k < 2:
             raise ValueError("IncrementalKmvSketch needs k >= 2")
-        super().__init__(spark, state_dir, driver_state_max_rows)
+        super().__init__(spark, state_dir)
         self.keys = list(keys)
         self.value_col = value_col
         self.k = k
@@ -291,7 +181,7 @@ class IncrementalQuantileSketch(_IncrementalMinKBase):
     (multiset min-k over (_h, _v) pairs ignores re-folded batches
     because a row's (hash, value) pair is identical on replay).
     ``estimate(ps)`` equals batch ``quantile_sketch`` over everything
-    seen. Commit regimes: see :class:`_IncrementalMinKBase`."""
+    seen. Persistence: see :class:`_IncrementalMinKBase`."""
 
     def __init__(
         self,
@@ -301,11 +191,10 @@ class IncrementalQuantileSketch(_IncrementalMinKBase):
         value_col: str,
         id_col: str,
         k: int = 1024,
-        driver_state_max_rows: int = 100_000,
     ) -> None:
         if k < 2:
             raise ValueError("IncrementalQuantileSketch needs k >= 2")
-        super().__init__(spark, state_dir, driver_state_max_rows)
+        super().__init__(spark, state_dir)
         self.keys = list(keys)
         self.value_col = value_col
         self.id_col = id_col
@@ -367,9 +256,7 @@ class IncrementalWeightedSample(_IncrementalMinKBase):
     violates the contract (both (skey, id) structs would be eligible
     and one id could appear twice).
 
-    Commit regimes: see :class:`_IncrementalMinKBase` (versioned
-    snapshots, one executor-side write, no collect at any state
-    size)."""
+    Persistence: see :class:`_IncrementalMinKBase`."""
 
     def __init__(
         self,
@@ -380,12 +267,11 @@ class IncrementalWeightedSample(_IncrementalMinKBase):
         weight_col: str,
         id_col: str,
         seed: int = 42,
-        driver_state_max_rows: int = 100_000,
         payload_cols: list[str] | None = None,
     ) -> None:
         if n < 1:
             raise ValueError("IncrementalWeightedSample needs n >= 1")
-        super().__init__(spark, state_dir, driver_state_max_rows)
+        super().__init__(spark, state_dir)
         self.keys = list(keys)
         self.n = n
         self.weight_col = weight_col
@@ -462,19 +348,13 @@ def weighted_sample_stream(
     """Maintain a weight-proportional sample always-on (the live
     "n best-weighted docs per language so far" a curation dashboard
     reads); any batch job or ``IncrementalWeightedSample.sample()``
-    reads it off ``state_dir``. Replay-idempotent (set max-n of
-    deterministic keys). Returns the started StreamingQuery."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        IncrementalWeightedSample(
-            batch_df.sparkSession, state_dir, keys, n, weight_col, id_col,
-            seed,
-        ).update(batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    reads it off ``state_dir``. Returns the started StreamingQuery."""
+    return start_lane(
+        stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalWeightedSample(
+            df.sparkSession, state_dir, keys, n, weight_col, id_col, seed
+        ).update(df, b),
     )
 
 
@@ -485,8 +365,8 @@ class IncrementalCorpusMix:
     feeding a keyed token-budget prefix. The batch chain is
     ``weighted_sample → token_budget_select`` as composed by
     queries._prepare_corpus_v2; this class maintains the SAME result
-    incrementally: the reservoir folds micro-batches (replay-
-    idempotent set max-n, versioned snapshots), carrying the budget
+    incrementally: the reservoir folds micro-batches (set max-n,
+    BatchStore snapshots), carrying the budget
     column (n_tok) as reservoir payload — the stream is gone by
     finalize time, so metadata must ride the state. ``mixed(budget)``
     then runs the keyed budget prefix on the ≤ n-rows-per-key state:
@@ -516,8 +396,8 @@ class IncrementalCorpusMix:
             payload_cols=[budget_col],
         )
 
-    def update(self, batch_df: DataFrame) -> None:
-        self.sample.update(batch_df)
+    def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
+        self.sample.update(batch_df, batch_id)
 
     def mixed(self, budget: int) -> DataFrame:
         """The current mixture selection: per key, the A-ES-ordered
@@ -549,28 +429,22 @@ def corpus_mix_stream(
     """Maintain the v2 mixing stage always-on; any batch job (or
     ``IncrementalCorpusMix.mixed(budget)``) reads the live mixture
     off ``state_dir``. Returns the started StreamingQuery."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        IncrementalCorpusMix(
-            batch_df.sparkSession, state_dir, keys, n, weight_col, id_col,
+    return start_lane(
+        stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalCorpusMix(
+            df.sparkSession, state_dir, keys, n, weight_col, id_col,
             budget_col, seed,
-        ).update(batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        ).update(df, b),
     )
 
 
-class IncrementalCmsSketch:
+class IncrementalCmsSketch(_SnapshotLane):
     """Persisted count-min sketch: the state snapshot holds (row, col,
-    cnt, _b) cells, ``_b`` = the last batch id folded in. ``update``
-    cell-wise-sums a micro-batch's sketch; replayed batch ids are
-    skipped (sums are not idempotent). Bounded state: ≤ depth × width
-    cells regardless of stream volume; persisted via the versioned
-    _SnapshotStore (one executor-side write, no collect, crash-safe —
-    see module docstring)."""
+    cnt) cells. ``update`` cell-wise-sums a micro-batch's sketch;
+    replayed batch ids are skipped by the BatchStore (sums are not
+    idempotent). Bounded state: ≤ depth × width cells regardless of
+    stream volume."""
 
     def __init__(
         self,
@@ -580,35 +454,27 @@ class IncrementalCmsSketch:
         depth: int = 4,
         width: int = 2048,
     ) -> None:
-        self.spark = spark
-        self.state_dir = state_dir
-        self.store = _SnapshotStore(spark, state_dir)
+        super().__init__(spark, state_dir)
         self.value_col = value_col
         self.depth = depth
         self.width = width
 
     def _state(self) -> DataFrame | None:
-        return self.store.read()
+        return self.store.latest("cells")
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _fold(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         state = self._state()
-        if state is not None:
-            last = state.agg(F.max("_b")).collect()[0][0]
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already folded in
         batch_cells = count_min_build(
             batch_df, self.value_col, self.depth, self.width
         )
-        if state is None:
-            merged = batch_cells
-        else:
-            merged = (
+        if state is not None:
+            batch_cells = (
                 state.select("row", "col", "cnt")
                 .unionByName(batch_cells)
                 .groupBy("row", "col")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        self.store.commit(merged.withColumn("_b", F.lit(batch_id).cast("long")))
+        return {"cells": batch_cells}
 
     def cells(self) -> DataFrame:
         state = self._state()
@@ -624,23 +490,17 @@ def kmv_sketch_stream(
     keys: list[str],
     value_col: str,
     k: int = 64,
-    driver_state_max_rows: int = 100_000,
 ):
     """Maintain a KMV distinct sketch always-on: every micro-batch is
     pruned and merged into ``state_dir``; any batch job (or
     ``IncrementalKmvSketch.estimate``) can read the live cardinality
     off it. Returns the started StreamingQuery."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        IncrementalKmvSketch(
-            batch_df.sparkSession, state_dir, keys, value_col, k,
-            driver_state_max_rows=driver_state_max_rows,
-        ).update(batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_lane(
+        stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalKmvSketch(
+            df.sparkSession, state_dir, keys, value_col, k
+        ).update(df, b),
     )
 
 
@@ -652,24 +512,18 @@ def quantile_sketch_stream(
     value_col: str,
     id_col: str,
     k: int = 1024,
-    driver_state_max_rows: int = 100_000,
 ):
     """Maintain a bottom-k quantile sample always-on (live latency /
     token-length / quality percentiles without a global sort); any
     batch job or ``IncrementalQuantileSketch.estimate`` reads the live
-    distribution off ``state_dir``. Replay-idempotent (set min-k).
-    Returns the started StreamingQuery."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        IncrementalQuantileSketch(
-            batch_df.sparkSession, state_dir, keys, value_col, id_col, k,
-            driver_state_max_rows=driver_state_max_rows,
-        ).update(batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    distribution off ``state_dir``. Returns the started
+    StreamingQuery."""
+    return start_lane(
+        stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalQuantileSketch(
+            df.sparkSession, state_dir, keys, value_col, id_col, k
+        ).update(df, b),
     )
 
 
@@ -682,34 +536,30 @@ def cms_sketch_stream(
     width: int = 2048,
 ):
     """Maintain a count-min sketch always-on (the streaming frequency
-    monitor: which tokens/URLs/users are suddenly hot). Batch-id
-    guarded — replays fold in exactly once."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        IncrementalCmsSketch(
-            batch_df.sparkSession, state_dir, value_col, depth, width
-        ).update(batch_df, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    monitor: which tokens/URLs/users are suddenly hot). Returns the
+    started StreamingQuery."""
+    return start_lane(
+        stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalCmsSketch(
+            df.sparkSession, state_dir, value_col, depth, width
+        ).update(df, b),
     )
 
 
-class IncrementalCmsTop:
+class IncrementalCmsTop(_SnapshotLane):
     """Persisted CMS heavy hitters — the always-on twin of
     ``operators.sketch.cms_top`` and the true streaming shape of the
     reference's ``TOP n OVER m`` aggregate (raql_expr.type `Top`,
     whose max_size m bounds the tracked candidates exactly as
     ``max_candidates`` does here).
 
-    State = two artifacts under ``state_dir``:
-    - ``cells/``: per-key CMS cells (keys…, row, col, cnt, _b) —
-      ≤ depth × width per key REGARDLESS of stream volume; ``_b`` is
-      the last folded batch id (cell sums are not replay-idempotent,
-      so replays are skipped — the IncrementalCmsSketch contract).
-    - ``cands/``: the tracked candidate values (keys…, _v) — ≤
+    State = two outputs of one BatchStore snapshot under
+    ``state_dir``, published together (replayed batch ids skipped —
+    cell sums are not replay-idempotent):
+    - ``cells``: per-key CMS cells (keys…, row, col, cnt) — ≤ depth ×
+      width per key REGARDLESS of stream volume;
+    - ``cands``: the tracked candidate values (keys…, _v) — ≤
       ``max_candidates`` per key, re-ranked by the merged cells after
       every fold, worst evicted.
 
@@ -721,15 +571,7 @@ class IncrementalCmsTop:
     evicted from the candidate list keeps counting in the cells but
     cannot re-enter the list until seen again — choose m ≫ n (the
     reference's `n OVER m` knob; with m ≥ distinct values the result
-    is exactly batch cms_top, pinned by parity test).
-
-    Commit order is cands FIRST, then cells-with-batch-id: a crash
-    between the two replays the batch (id not yet recorded), and the
-    candidate union is idempotent — mixed state self-heals. Both
-    artifacts persist via their own versioned _SnapshotStore (one
-    executor-side write each, no collect, crash-safe on object stores
-    — module docstring); ``driver_state_max_rows`` is accepted for
-    API compatibility and ignored, like _IncrementalMinKBase."""
+    is exactly batch cms_top, pinned by parity test)."""
 
     def __init__(
         self,
@@ -741,21 +583,25 @@ class IncrementalCmsTop:
         depth: int = 4,
         width: int = 2048,
         weight_col: str | None = None,
-        driver_state_max_rows: int = 100_000,
     ) -> None:
         if max_candidates < 1:
             raise ValueError("IncrementalCmsTop needs max_candidates >= 1")
-        self.spark = spark
-        self.state_dir = state_dir.rstrip("/")
+        super().__init__(spark, state_dir)
         self.keys = list(keys)
         self.value_col = value_col
         self.m = max_candidates
         self.depth = depth
         self.width = width
         self.weight_col = weight_col
-        self.last_commit_path: str | None = None
-        self.cells_store = _SnapshotStore(spark, self.state_dir + "/cells")
-        self.cands_store = _SnapshotStore(spark, self.state_dir + "/cands")
+
+    def _states(self) -> tuple[DataFrame, DataFrame]:
+        """(cells, cands) of the newest snapshot, geometry-checked."""
+        cells = self.store.latest("cells")
+        cands = self.store.latest("cands")
+        if cells is None or cands is None:
+            raise ValueError(f"no sketch state at {self.state_dir}")
+        self._check_geometry(cells)
+        return cells, cands
 
     def _check_geometry(self, cells: DataFrame) -> None:
         """Cell estimates are only comparable at ONE (depth, width) —
@@ -774,18 +620,15 @@ class IncrementalCmsTop:
                 f"depth={self.depth} width={self.width}"
             )
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _fold(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         from ramen_spark.operators.sketch import (
             cms_build_keyed,
             cms_estimate_candidates,
         )
 
-        cells = self.cells_store.read()
+        cells = self.store.latest("cells")
         if cells is not None:
             self._check_geometry(cells)
-            last = cells.agg(F.max("_b")).collect()[0][0]
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch: already folded in
         batch_cells = cms_build_keyed(
             batch_df, self.keys, self.value_col, self.depth, self.width,
             self.weight_col,
@@ -809,7 +652,7 @@ class IncrementalCmsTop:
             .select(*self.keys, F.col(self.value_col).alias("_v"))
             .distinct()
         )
-        old_cand = self.cands_store.read()
+        old_cand = self.store.latest("cands")
         pool = (
             new_cand
             if old_cand is None
@@ -827,16 +670,13 @@ class IncrementalCmsTop:
             .select(*self.keys, F.inline("_m"))
             .select(*self.keys, F.col("v").alias("_v"))
         )
-        # cands first, then cells-with-batch-id (see class docstring);
         # the geometry stamp makes a depth/width mismatch on resume or
         # drift a loud error instead of an all-zero report
-        self.cands_store.commit(kept)
-        self.cells_store.commit(
-            merged_cells.withColumn("_b", F.lit(batch_id).cast("long"))
-            .withColumn("_geo_depth", F.lit(self.depth))
-            .withColumn("_geo_width", F.lit(self.width))
-        )
-        self.last_commit_path = "distributed"
+        return {
+            "cells": merged_cells.withColumn("_geo_depth", F.lit(self.depth))
+            .withColumn("_geo_width", F.lit(self.width)),
+            "cands": kept,
+        }
 
     def top(self, n: int) -> DataFrame:
         """Current heavy hitters: (keys…, top = array of the n tracked
@@ -848,11 +688,7 @@ class IncrementalCmsTop:
             cms_rank_top,
         )
 
-        cells = self.cells_store.read()
-        cands = self.cands_store.read()
-        if cells is None or cands is None:
-            raise ValueError(f"no sketch state at {self.state_dir}")
-        self._check_geometry(cells)
+        cells, cands = self._states()
         est = cms_estimate_candidates(
             cells.select(*self.keys, "row", "col", "cnt"),
             cands, self.keys, self.depth, self.width,
@@ -876,15 +712,10 @@ class IncrementalCmsTop:
                 f"{self.keys}/{self.depth}x{self.width} vs "
                 f"{other.keys}/{other.depth}x{other.width}"
             )
-        pairs = []
-        for side in (self, other):
-            cells = side.cells_store.read()
-            cands = side.cands_store.read()
-            if cells is None or cands is None:
-                raise ValueError(f"no sketch state at {side.state_dir}")
-            side._check_geometry(cells)
-            pairs += [cells, cands]
-        return cms_drift(*pairs, self.keys, n, self.depth, self.width)
+        return cms_drift(
+            *self._states(), *other._states(), self.keys, n, self.depth,
+            self.width,
+        )
 
 
 def cms_top_stream(
@@ -901,16 +732,12 @@ def cms_top_stream(
     """Maintain CMS heavy hitters always-on (which URLs/tokens/users
     are hot right now, per key, in bounded state); any batch job or
     ``IncrementalCmsTop.top(n)`` reads the live ranking off
-    ``state_dir``. Batch-id guarded like the plain CMS lane."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        IncrementalCmsTop(
-            batch_df.sparkSession, state_dir, keys, value_col,
-            max_candidates, depth, width, weight_col,
-        ).update(batch_df, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    ``state_dir``. Returns the started StreamingQuery."""
+    return start_lane(
+        stream,
+        checkpoint_dir,
+        lambda df, b: IncrementalCmsTop(
+            df.sparkSession, state_dir, keys, value_col, max_candidates,
+            depth, width, weight_col,
+        ).update(df, b),
     )

@@ -86,7 +86,7 @@ def kafka_live_source(
 ):
     """READ FROM KAFKA with NO connector jar: the micro-batch polling
     source built on the tested wire client (Produce/Fetch over raw TCP,
-    offsets checkpointed in a _SnapshotStore, records spooled to
+    offsets checkpointed in a BatchStore, records spooled to
     parquet executor-side) — ``sources/kafka_live.KafkaLiveSource``.
     The live twin of the offline log-segment lane; both decode through
     the same ``decode_kafka_segment``."""

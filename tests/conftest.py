@@ -141,7 +141,6 @@ _SLOW_TESTS = {
     "test_streaming_sketch.py::test_incremental_corpus_mix_equals_batch_v2_chain",  # 26.7s
     "test_streaming_sketch.py::test_sketch_drift_from_persisted_states",  # 7.6s
     "test_streaming_sketch.py::test_stream_static_interval_join",  # 7.8s
-    "test_streaming_sketch.py::test_streaming_cms_equals_batch_and_skips_replays",  # 4.9s
     "test_streaming_sketch.py::test_streaming_cms_top_equals_batch_and_skips_replays",  # 4.7s
     "test_streaming_sketch.py::test_streaming_cms_top_stream_lane_and_eviction",  # 13.0s
     "test_streaming_sketch.py::test_streaming_kmv_distributed_commit_high_cardinality",  # 7.3s

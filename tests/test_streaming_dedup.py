@@ -35,6 +35,7 @@ def _run_stream(spark, docs, tmp_path, n_batches, seed=None):
         IncrementalDedupIndex,
         incremental_dedup_stream,
     )
+    from ramen_spark.streaming.publish import BatchStore
 
     src = tmp_path / "stream_src"
     for i in range(n_batches):
@@ -42,7 +43,6 @@ def _run_stream(spark, docs, tmp_path, n_batches, seed=None):
             str(src / f"b{i}")
         )
     index_dir = str(tmp_path / "index")
-    pairs_dir = str(tmp_path / "pairs")
     if seed is not None:
         IncrementalDedupIndex(spark, index_dir, **{
             k: PARAMS[k] for k in ("num_hashes", "bands")
@@ -55,7 +55,6 @@ def _run_stream(spark, docs, tmp_path, n_batches, seed=None):
     q = incremental_dedup_stream(
         stream,
         index_dir,
-        pairs_dir,
         str(tmp_path / "ckpt"),
         **PARAMS,
     )
@@ -63,7 +62,7 @@ def _run_stream(spark, docs, tmp_path, n_batches, seed=None):
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.read.parquet(pairs_dir)
+    return BatchStore(spark, index_dir).union("pairs")
 
 
 def test_streaming_equals_batch_self_dedup(spark, tmp_path):
@@ -166,6 +165,7 @@ def test_streaming_decontaminate_equals_batch(spark, tmp_path):
     from ramen_spark.catalog import load_table
     from ramen_spark.operators.dedup import decontaminate
     from ramen_spark.streaming.dedup import decontaminate_stream
+    from ramen_spark.streaming.publish import BatchStore
 
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % 97 != 0)
@@ -188,7 +188,10 @@ def test_streaming_decontaminate_equals_batch(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    got = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
+    got = {
+        tuple(r)
+        for r in BatchStore(spark, out_dir).union("report").collect()
+    }
     exp = {tuple(r) for r in decontaminate(train, ev).collect()}
     assert got == exp and len(exp) > 0
 
@@ -202,6 +205,7 @@ def test_streaming_vector_dedup_equals_batch(spark, tmp_path):
     from ramen_spark.catalog import load_table
     from ramen_spark.operators.similarity import pairwise_near_dups
     from ramen_spark.streaming.dedup import incremental_vector_dedup_stream
+    from ramen_spark.streaming.publish import BatchStore
 
     emb = load_table(spark, SF_SMALL, "embeddings").select(
         "vec_id", "embedding"
@@ -219,7 +223,6 @@ def test_streaming_vector_dedup_equals_batch(spark, tmp_path):
     q = incremental_vector_dedup_stream(
         stream,
         str(tmp_path / "index"),
-        str(tmp_path / "pairs"),
         str(tmp_path / "ckpt"),
         dim=64,
         n_planes=2,
@@ -231,7 +234,9 @@ def test_streaming_vector_dedup_equals_batch(spark, tmp_path):
         q.stop()
     got = {
         (min(r["id_new"], r["id_old"]), max(r["id_new"], r["id_old"]), r["sim"])
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
+        for r in BatchStore(spark, str(tmp_path / "index"))
+        .union("pairs")
+        .collect()
     }
     exp = {
         (r["id_a"], r["id_b"], r["sim"])
@@ -260,6 +265,7 @@ def test_streaming_semantic_dedup_equals_batch(spark, tmp_path):
         incremental_semantic_dedup_stream,
         semantic_keep_from_pairs,
     )
+    from ramen_spark.streaming.publish import BatchStore
 
     emb = load_table(spark, SF_SMALL, "embeddings").select(
         "vec_id", "embedding"
@@ -278,7 +284,6 @@ def test_streaming_semantic_dedup_equals_batch(spark, tmp_path):
     q = incremental_semantic_dedup_stream(
         stream,
         str(tmp_path / "sem_index"),
-        str(tmp_path / "sem_pairs"),
         str(tmp_path / "sem_ckpt"),
         cents,
         dim=64,
@@ -290,8 +295,9 @@ def test_streaming_semantic_dedup_equals_batch(spark, tmp_path):
     finally:
         q.stop()
 
-    idx_vecs = spark.read.parquet(str(tmp_path / "sem_index" / "vecs"))
-    pairs = spark.read.parquet(str(tmp_path / "sem_pairs"))
+    store = BatchStore(spark, str(tmp_path / "sem_index"))
+    idx_vecs = store.union("vecs")
+    pairs = store.union("pairs")
     got = {
         (r["vec_id"], r["cell"], r["centsim"], r["keep"])
         for r in semantic_keep_from_pairs(idx_vecs, pairs).collect()

@@ -110,7 +110,6 @@ def test_streaming_kmv_distributed_commit_high_cardinality(spark, tmp_path):
         sk.update(b1)
     finally:
         DataFrame.collect = real_collect
-    assert sk.last_commit_path == "distributed"
 
     got = {tuple(r) for r in sk.estimate().collect()}
     exp = {
@@ -397,8 +396,8 @@ def test_streaming_cms_top_stream_lane_and_eviction(spark, tmp_path):
     top = {r["g"]: r["top"] for r in inc.top(1).collect()}
     assert top == {"k": [7]}  # 20 sightings vs 1 each — rank by est
     # state boundedness: ≤ m candidates, ≤ depth × width cells
-    cands = inc.cands_store.read()
-    cells = inc.cells_store.read()
+    cands = inc.store.latest("cands")
+    cells = inc.store.latest("cells")
     assert cands.count() <= 8
     assert cells.count() <= 3 * 512
 
@@ -576,7 +575,7 @@ def test_sketch_drift_from_persisted_states(spark, tmp_path):
 
 def test_cli_drift_reads_snapshot_roots(spark, tmp_path, capsys):
     """`ramen drift A B --by grp` — the always-on observability
-    surface: two _SnapshotStore roots in, one drift report out."""
+    surface: two BatchStore roots in, one drift report out."""
     from ramen_spark.cli import main
     from ramen_spark.streaming.sketch import IncrementalQuantileSketch
 
@@ -615,17 +614,15 @@ def test_legacy_null_kmv_k_stays_null_after_merge(spark, tmp_path):
     mode. Groups introduced ONLY by post-legacy batches (no legacy
     rows) keep their exact build k."""
     from ramen_spark.operators.sketch import kmv_prune
-    from ramen_spark.streaming.sketch import (
-        IncrementalKmvSketch,
-        _SnapshotStore,
-    )
+    from ramen_spark.streaming.sketch import IncrementalKmvSketch
 
     legacy_rows = spark.createDataFrame(
         [("a", i) for i in range(50)], "g string, v long"
     )
-    # simulate a pre-round-11 snapshot: pruned rows WITHOUT _kmv_k
+    # simulate a pre-round-11 snapshot: pruned rows WITHOUT _kmv_k,
+    # in that era's one-output layout (parquet directly in v1)
     legacy = kmv_prune(legacy_rows, ["g"], "v", 8).drop("_kmv_k")
-    _SnapshotStore(spark, str(tmp_path / "state")).commit(legacy)
+    legacy.write.parquet(str(tmp_path / "state" / "v1"))
 
     sk = IncrementalKmvSketch(spark, str(tmp_path / "state"), ["g"], "v", k=8)
     batch = spark.createDataFrame(
@@ -635,7 +632,7 @@ def test_legacy_null_kmv_k_stays_null_after_merge(spark, tmp_path):
     )
     sk.update(batch)
 
-    state = sk.store.read()
+    state = sk.store.latest("state")
     ks = {r["g"]: r["_kmv_k"] for r in
           state.select("g", "_kmv_k").distinct().collect()}
     assert ks["a"] is None      # legacy portion: build k unknown

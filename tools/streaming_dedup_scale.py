@@ -52,17 +52,16 @@ def main() -> None:
         ),
         flush=True,
     )
-    # micro-batches driven directly (the streaming query's foreachBatch
-    # body, minus the checkpoint machinery — same plan per batch)
+    # micro-batches driven directly (the streaming query's per-batch
+    # fold, minus the checkpoint machinery — same plan per batch)
     for i in range(n_batches):
         # odd ids: bucket on doc_id//2 so every batch is non-empty
         batch = new.filter(
             F.floor(F.col("doc_id") / 2) % n_batches == i
         )
         t0 = time.perf_counter()
-        sigs = index.append(batch)
-        pairs = index.probe(sigs, 0.5)
-        n_pairs = pairs.count()
+        index.update(batch, i, 0.5)
+        n_pairs = index.store.latest("pairs").count()
         print(
             json.dumps(
                 {"stage": f"batch_{i}", "docs": batch.count(),
