@@ -5,26 +5,23 @@ loop src/CodeGenLib_Skeletons.ml:433-960) is: per input tuple —
 where → group lookup → update group state → evaluate COMMIT condition →
 emit output tuple → FLUSH or KEEP the group.
 
-Two implementations:
+The tumbling shape ``GROUP BY key, time//dt + COMMIT AFTER in.time >
+out.time + slack`` needs no fold: ``plans.raql.compile_operation``
+lowers it to a plain Catalyst ``groupBy`` (map-side partial
+aggregation, one shuffle on (key, bucket)). Everything else folds
+here, with emission interleaved with accumulation, KEEP vs FLUSH and
+COMMIT BEFORE re-seeding the group:
 
-1. **Native fast path** (``tumbling_aggregate``): the overwhelmingly
-   common commit shape ``GROUP BY key, time//dt + COMMIT AFTER
-   in.time > out.time + slack`` is exactly a tumbling event-time
-   window. We lower it to ``groupBy(key, floor(time/dt))`` — pure
-   Catalyst: map-side partial aggregation, one shuffle on
-   (key, bucket), AQE-sized reducers. This is the plan that survives
-   100 TB; it is what bench.py measures.
-
-2. **General engine** (``commit_aggregate``): arbitrary commit
-   conditions over (current input, group state, group's previous
-   output) — semantics Catalyst can't express (emission interleaved
-   with accumulation, KEEP vs FLUSH, COMMIT BEFORE re-seeding the
-   group). Implemented as an ordered fold per group key via
-   ``applyInPandas``: one shuffle on the group key, then a sequential
-   scan within each group (this is inherent — the reference is a
-   single-threaded loop; we get distribution ACROSS groups for free).
-   ``global_last``-style cross-group state requires a single group and
-   is documented as the sequential corner.
+1. **Per-group fold** (``commit_aggregate``, one step ``fold_group``
+   shared with streaming.commit's per-group engine): conditions that
+   read only the group's own state fold each group separately via
+   ``applyInPandas`` — one shuffle on the group key, then a sequential
+   scan within each group, parallel across groups.
+2. **Check-all fold** (``WorkerFold``, run by ``commit_worker`` in
+   batch and streaming.commit's worker mode in streaming): a condition
+   reading the input tuple re-checks every live group at each input,
+   so the whole input folds in one ordered pass through one group
+   hashtable — the reference's worker loop.
 
 Reference parity notes:
 - COMMIT AFTER (default true → emit per input): src/RamenOperation.ml:857.
@@ -36,52 +33,16 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import heapq
+import itertools
+import operator
 from collections.abc import Callable, Iterable
-from typing import Any
+from typing import Any, NamedTuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-# ---------------------------------------------------------------------------
-# fast path: tumbling event-time window
-# ---------------------------------------------------------------------------
-
-
-def time_bucket(time_col: Column, width_seconds: float) -> Column:
-    """``time // dt`` — the reference's idiomatic window key
-    (e.g. the KSQL-benchmark query groups on
-    ``capture_begin // 60_000_000`` — site/blog/2019-02.php)."""
-    return F.floor(time_col.cast("double") / F.lit(width_seconds))
-
-
-def tumbling_aggregate(
-    df: DataFrame,
-    keys: list[str | Column],
-    time_col: str | Column,
-    width_seconds: float,
-    aggs: list[Column],
-    where: Column | None = None,
-) -> DataFrame:
-    """GROUP BY keys + time//dt — the native lowering of
-    ``COMMIT AFTER in.time > out.time + dt`` tumbling windows.
-
-    Catalyst gives partial (map-side) aggregation before the single
-    shuffle on (keys, bucket); filters passed via ``where`` are pushed
-    into the scan.
-    """
-    time_col = F.col(time_col) if isinstance(time_col, str) else time_col
-    if where is not None:
-        df = df.filter(where)
-    bucket = time_bucket(time_col, width_seconds).alias("time_bucket")
-    key_cols = [F.col(k) if isinstance(k, str) else k for k in keys]
-    return df.groupBy(*key_cols, bucket).agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# general engine: ordered fold with COMMIT/FLUSH semantics
-# ---------------------------------------------------------------------------
 
 State = dict[str, Any]
 Row = dict[str, Any]
@@ -154,6 +115,63 @@ def encode_rows(out_rows: list[Row], cols: list[str]) -> pd.DataFrame:
     return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
 
 
+def fold_group(
+    st: State,
+    previous: Row | None,
+    rows: Iterable[Row],
+    init_state: Callable[[], State],
+    update: Callable[[State, Row], None],
+    finalize: Callable[[State, Row, Row | None], Row],
+    commit_cond: Callable[[State, Row, Row | None], bool],
+    commit_before: bool = False,
+    flush: bool = True,
+    where: Callable[[State, Row, Row | None], bool] | None = None,
+) -> tuple[State, Row | None, list[Row]]:
+    """One group's ordered fold, the step both per-group engines run:
+    folds ``rows`` into the group's state ``st`` given ``previous``
+    (its last committed output, RaQL's ``previous`` / ``local_last``
+    namespace) and returns the new state, the new previous and the
+    committed tuples.
+
+    - AFTER (default): update state with the row, evaluate
+      ``commit_cond(state, row, previous)``; on True emit
+      ``finalize(state, row, previous)`` and (if ``flush``) reset
+      state.
+    - BEFORE: evaluate the condition first; on True emit the
+      *pre-update* aggregate, reset the group, then accumulate the
+      current row into the fresh state
+      (src/CodeGenLib_Skeletons.ml:620-646 semantics).
+    - ``where``: stateful filter evaluated per row INSIDE the fold
+      (RaQL allows stateful functions in WHERE — tests/func/
+      basic_aggr.ramen f2); rows it rejects advance WHERE state but
+      neither update the group nor trigger commits."""
+    out_rows: list[Row] = []
+    for row in rows:
+        st["__prev_out"] = previous  # previous namespace for update
+        if where is not None and not where(st, row, previous):
+            continue
+        if commit_before:
+            if commit_cond(st, row, previous):
+                # the emitted candidate predates the incoming row: its
+                # non-aggregate fields read the LAST aggregated row
+                # (reference commit-before, commit_before.ramen)
+                out = finalize(st, st.get("__last_row", row), previous)
+                out_rows.append(out)
+                previous = out
+                st = init_state()
+                st["__prev_out"] = previous
+            update(st, row)
+        else:
+            update(st, row)
+            if commit_cond(st, row, previous):
+                out = finalize(st, row, previous)
+                out_rows.append(out)
+                previous = out
+                if flush:
+                    st = init_state()
+    return st, previous, out_rows
+
+
 def commit_aggregate(
     df: DataFrame,
     key_cols: list[str],
@@ -166,173 +184,269 @@ def commit_aggregate(
     commit_before: bool = False,
     flush: bool = True,
     where: Callable[[State, Row, Row | None], bool] | None = None,
-    trigger_df: DataFrame | None = None,
-    trigger_in_cols: list[str] | None = None,
 ) -> DataFrame:
-    """General COMMIT engine (batch).
+    """General COMMIT engine (batch), one fold per group: shuffled once
+    on ``key_cols``, each group's rows fold in ``order_col`` order
+    through ``fold_group`` (AFTER/BEFORE/FLUSH/WHERE semantics there).
 
-    Per group (shuffled once on ``key_cols``), rows are folded in
-    ``order_col`` order:
-
-    - AFTER (default): update state with the row, evaluate
-      ``commit_cond(state, row, previous_out)``; on True emit
-      ``finalize(state, row, previous_out)`` and (if ``flush``) reset
-      state.
-    - BEFORE: evaluate the condition first; on True emit the
-      *pre-update* aggregate, reset the group, then accumulate the
-      current row into the fresh state
-      (src/CodeGenLib_Skeletons.ml:620-646 semantics).
-
-    ``previous_out`` is the group's last committed output (RaQL's
-    ``previous`` / ``local_last`` namespace, src/raql_variable.type).
-
-    ``where``: stateful filter evaluated per row INSIDE the fold (RaQL
-    allows stateful functions in WHERE — tests/func/basic_aggr.ramen
-    f2); rows it rejects advance WHERE state but neither update the
-    group nor trigger commits.
-
-    ``trigger_df``: the GLOBAL trigger relation of the reference's
-    ``check_commit_for_all`` path — a commit condition reading the
-    input tuple, at which EVERY live group must (re-)evaluate its
-    commit (src/CodeGen_Helpers.ml:52,
-    src/CodeGenLib_Skeletons.ml:810-868). It holds, for EVERY input
-    row, the global order value ``__trig_ord`` and the condition's
-    in-columns (``trigger_in_cols``, as ``__tc_<col>``). Each group
-    evaluates ``commit_cond(state, trigger_row, previous)`` against
-    its own candidate at each of them, in order, including its own
-    rows: post-update in AFTER mode; in BEFORE mode the own row's
-    pre-update check is the plain one and its trigger is consumed
-    silently.
-
-    The trigger relation stays distributed: it is replicated per group
-    key (crossJoin with the distinct keys — the reference documents
-    check-all as the slow path meant for few-group aggregations, so the
-    fan-out is |triggers|×|groups| with both factors expected small)
-    and cogrouped into the fold, never materialized on the driver.
-    Other groups' triggers are placed by comparing ``__trig_ord`` with
-    the row's order value, so with ties in the order column this fold
-    and the streaming ``WorkerFold`` (which walks rows one at a time,
-    tied rows in arrival order) can commit different windows
-    (documented divergence; strict-xfail cases in
-    tests/test_worker_fold.py).
+    Conditions that read the input tuple (the reference's
+    ``check_commit_for_all``) re-check every live group at each input;
+    they do not fold per group but through the one ``WorkerFold`` that
+    batch (``commit_worker``) and the always-on worker share.
 
     Rows reach the fold through ``decode_rows``: a nullable integral
     value beyond 2^53 is rounded by PySpark's float64 pandas hop
     (documented divergence, shared with streaming.commit).
 
-    This is the slow general path by design — Python per row, but one
-    shuffle total and parallel across groups. Lower to
-    ``tumbling_aggregate`` whenever the commit shape allows.
+    Python per row, but one shuffle total and parallel across groups.
     """
-    first_order = order_col if isinstance(order_col, str) else order_col[0]
-    in_cols = trigger_in_cols or []
-    int_cols = int_columns(df.schema)
-    cols = _schema_names(output_schema)
-
-    def fold_with(rows: list[Row], trows: list) -> pd.DataFrame:
-        out_rows: list[Row] = []
-        state = init_state()
-        previous: Row | None = None
-
-        def emit(row):
-            nonlocal state, previous
-            out = finalize(state, row, previous)
-            out_rows.append(out)
-            previous = out
-            if flush:
-                state = init_state()
-
-        tri = 0
-
-        def fire_triggers(upto, inclusive: bool) -> None:
-            # check-all mode: evaluate the commit condition for THIS
-            # group against each global input row in order.
-            # state['__trig'] marks cross-group evaluation: the
-            # candidate must build from the group's own last row
-            nonlocal tri
-            while tri < len(trows) and (
-                trows[tri][0] <= upto if inclusive else trows[tri][0] < upto
-            ):
-                trow = trows[tri][1]
-                tri += 1
-                if state.get("__n", 0) > 0:
-                    state["__trig"] = True
-                    try:
-                        fire = commit_cond(state, trow, previous)
-                    finally:
-                        state.pop("__trig", None)
-                    if fire:
-                        emit(state.get("__last_row"))
-
-        for row in rows:
-            state["__prev_out"] = previous  # previous namespace for update
-            if trows:
-                # triggers before this row (rows of OTHER groups)
-                fire_triggers(row[first_order], inclusive=False)
-            if where is not None and not where(state, row, previous):
-                continue
-            if commit_before:
-                if trows:
-                    # the self trigger is evaluated right here (BEFORE
-                    # semantics); consume its global entry silently
-                    while tri < len(trows) and trows[tri][0] <= row[first_order]:
-                        tri += 1
-                if commit_cond(state, row, previous):
-                    # the emitted candidate predates the incoming row:
-                    # its non-aggregate fields read the LAST aggregated
-                    # row (reference commit-before, commit_before.ramen)
-                    fin_row = state.get("__last_row", row)
-                    out = finalize(state, fin_row, previous)
-                    out_rows.append(out)
-                    previous = out
-                    state = init_state()
-                    state["__prev_out"] = previous
-                update(state, row)
-            else:
-                update(state, row)
-                if trows:
-                    # the group's own row is also a global trigger,
-                    # checked post-update (reference aggregate_one order)
-                    fire_triggers(row[first_order], inclusive=True)
-                elif commit_cond(state, row, previous):
-                    emit(row)
-        if trows:
-            fire_triggers(float("inf"), inclusive=True)
-        return encode_rows(out_rows, cols)
+    int_cols, cols = int_columns(df.schema), _schema_names(output_schema)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        return fold_with(decode_rows([pdf], order_col, int_cols), [])
-
-    if trigger_df is None:
-        if key_cols:
-            # groupBy+applyInPandas = exactly one shuffle on the key
-            return df.groupBy(*key_cols).applyInPandas(fold, schema=output_schema)
-        # single global group (reference: no GROUP BY ⇒ one group) —
-        # inherently sequential, matches the reference's execution model
-        return df.groupBy(F.lit(1).alias("_g")).applyInPandas(
-            fold, schema=output_schema
+        _, _, out_rows = fold_group(
+            init_state(), None, decode_rows([pdf], order_col, int_cols),
+            init_state, update, finalize, commit_cond,
+            commit_before, flush, where,
         )
+        return encode_rows(out_rows, cols)
 
-    trig_int_cols = int_columns(trigger_df.schema)
+    # groupBy+applyInPandas = exactly one shuffle on the key; no GROUP
+    # BY ⇒ one global group (the reference's execution model)
+    keys = key_cols or [F.lit(1).alias("_g")]
+    return df.groupBy(*keys).applyInPandas(fold, schema=output_schema)
 
-    def fold_cogrouped(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-        # this group's replica of the global trigger relation
-        trows = [
-            (r["__trig_ord"], {c: r[f"__tc_{c}"] for c in in_cols})
-            for r in decode_rows([tpdf], ["__trig_ord"], trig_int_cols)
-        ]
-        return fold_with(decode_rows([pdf], order_col, int_cols), trows)
 
-    # check-all-groups: cogroup the data with the trigger relation so
-    # every group's fold task receives the global triggers via the same
-    # shuffle — no driver-side materialization
-    if key_cols:
-        # fresh exprIds on the key projection — both cogroup sides
-        # descend from the same source relation
-        keys_df = df.select(*[F.col(k).alias(k) for k in key_cols]).distinct()
-        trig = trigger_df.crossJoin(F.broadcast(keys_df))
-        grouped = df.groupBy(*key_cols).cogroup(trig.groupBy(*key_cols))
-    else:
-        g = F.lit(1).alias("_g")
-        grouped = df.groupBy(g).cogroup(trigger_df.groupBy(g))
-    return grouped.applyInPandas(fold_cogrouped, schema=output_schema)
+class Cond0(NamedTuple):
+    """The reference's ``cond0`` term of a check-all commit condition
+    (src/CodeGenLib_Skeletons.ml:505-527): one comparison
+    ``in_key(row) OP out_key(state, previous)`` that must hold for the
+    whole condition to hold, so groups ordered by their out-key need
+    checking only while the term holds.
+
+    ``in_key`` reads only the input row (and params/literals);
+    ``out_key`` reads only the group's trigger-path candidate output.
+    ``op`` is ``>``, ``>=``, ``<`` or ``<=`` with the input on the
+    left."""
+
+    in_key: Callable[[Row], Any]
+    out_key: Callable[[State, Row | None], Any]
+    op: str
+
+
+_CMP = {">": operator.gt, ">=": operator.ge, "<": operator.lt, "<=": operator.le}
+
+
+class _Desc:
+    """Heap key in reverse order (a max-heap for ``in < out`` terms)."""
+
+    __slots__ = ("v",)
+
+    def __init__(self, v):
+        self.v = v
+
+    def __lt__(self, other):
+        return other.v < self.v
+
+    def __eq__(self, other):
+        return self.v == other.v
+
+
+class WorkerFold:
+    """The reference's worker loop over the whole group hashtable
+    ``groups`` (gkey → {"st": state, "prev": last committed output},
+    in group-creation order): folds ``rows`` in order, mutates
+    ``groups`` and returns the committed tuples. It serves check-all
+    conditions in both engines: batch ``commit_worker`` calls it once
+    per Arrow batch of one ordered pass, the always-on worker
+    (streaming.commit) once per micro-batch; both carry ``groups``
+    over between calls.
+
+    Trigger semantics (src/CodeGenLib_Skeletons.ml:810-868):
+
+    - every input row (including WHERE-rejected ones) is a trigger:
+      each live group (``__n`` > 0) evaluates the condition with
+      ``state['__trig']`` set (candidate built from the group's last
+      aggregated row) and commits/flushes on True, in group-creation
+      order;
+    - in AFTER mode the row's own group checks post-update via the
+      same trigger path; in BEFORE mode the own check runs pre-update
+      on the plain condition and the own trigger is consumed silently.
+
+    Which live groups a row checks: with a ``cond0`` term, only those
+    popped from a heap keyed by their out-key while the term holds
+    (O(log groups) per row; the reference's heap,
+    src/CodeGenLib_Skeletons.ml:620-646,810-868); the heap is rebuilt
+    at each call, so the state format carries no index. Without one
+    (``in.m <> out.m``), every live group. Either way each commit
+    comes from the same ``commit_cond``/``finalize`` calls.
+
+    A group whose state holds no rows (flushed, or created by a
+    WHERE-rejected row) leaves the hashtable, as the reference's FLUSH
+    does (src/CodeGenLib_Skeletons.ml:678-695), unless
+    ``keep_flushed``: the operation reads its last output (previous
+    namespaces), keeps state (KEEP), or keeps other per-group state.
+    """
+
+    def __init__(
+        self,
+        key_cols: list[str],
+        init_state: Callable[[], State],
+        update: Callable[[State, Row], None],
+        finalize: Callable[[State, Row, Row | None], Row],
+        commit_cond: Callable[[State, Row, Row | None], bool],
+        commit_before: bool = False,
+        flush: bool = True,
+        where: Callable[[State, Row, Row | None], bool] | None = None,
+        cond0: Cond0 | None = None,
+        keep_flushed: bool = True,
+    ):
+        self.key_cols = key_cols
+        self.init_state = init_state
+        self.update = update
+        self.finalize = finalize
+        self.commit_cond = commit_cond
+        self.commit_before = commit_before
+        self.flush = flush
+        self.where = where
+        self.cond0 = cond0
+        self.keep_flushed = keep_flushed
+
+    def __call__(self, groups: dict[tuple, dict], rows: list[Row]) -> list[Row]:
+        init_state, update = self.init_state, self.update
+        finalize, commit_cond = self.finalize, self.commit_cond
+        cond0 = self.cond0
+        out_rows: list[Row] = []
+        # cond0 index: heap of (key, creation seq, version, gkey, raw
+        # key); an entry is current iff its version is the group's
+        seq = {gk: i for i, gk in enumerate(groups)}
+        next_seq = itertools.count(len(seq))
+        version: dict[tuple, int] = {}
+        next_version = itertools.count()
+        heap: list[tuple] = []
+        if cond0 is not None:
+            holds = _CMP[cond0.op]
+            desc = cond0.op in ("<", "<=")
+
+        def rekey(gkey: tuple, g: dict) -> None:
+            v = version[gkey] = next(next_version)
+            st = g["st"]
+            if st.get("__n", 0) <= 0:
+                return
+            k = cond0.out_key(st, g["prev"])
+            if k is None or k != k:  # NULL or NaN: the term never holds
+                return
+            heapq.heappush(heap, (_Desc(k) if desc else k, seq[gkey], v, gkey, k))
+
+        def drop_if_idle(gkey: tuple, g: dict) -> bool:
+            if self.keep_flushed or g["st"].get("__n", 0) > 0:
+                return False
+            del groups[gkey]
+            version.pop(gkey, None)
+            return True
+
+        def emit(gkey: tuple, g: dict, row: Row | None) -> None:
+            out = finalize(g["st"], row, g["prev"])
+            out_rows.append(out)
+            g["prev"] = out
+            if self.flush:
+                g["st"] = init_state()
+            if not drop_if_idle(gkey, g) and cond0 is not None:
+                rekey(gkey, g)
+
+        def trigger(gkey: tuple, g: dict, row: Row) -> bool:
+            st = g["st"]
+            st["__trig"] = True
+            try:
+                fire = commit_cond(st, row, g["prev"])
+            finally:
+                st.pop("__trig", None)
+            if fire:
+                emit(gkey, g, st.get("__last_row"))
+            return fire
+
+        if cond0 is not None:
+            for gkey, g in groups.items():
+                rekey(gkey, g)
+
+        for row in rows:
+            gkey = tuple(row[k] for k in self.key_cols)
+            g = groups.get(gkey)
+            if g is None:
+                g = groups[gkey] = {"st": init_state(), "prev": None}
+                seq[gkey] = next(next_seq)
+            st = g["st"]
+            st["__prev_out"] = g["prev"]
+            accepted = self.where is None or self.where(st, row, g["prev"])
+            if accepted:
+                if self.commit_before and commit_cond(st, row, g["prev"]):
+                    out = finalize(st, st.get("__last_row", row), g["prev"])
+                    out_rows.append(out)
+                    g["prev"] = out
+                    g["st"] = st = init_state()
+                    st["__prev_out"] = g["prev"]
+                update(st, row)
+                if cond0 is not None:
+                    rekey(gkey, g)
+            else:
+                drop_if_idle(gkey, g)
+            # this row triggers every live group's commit check; a
+            # BEFORE-mode own check already ran above (silent
+            # consumption of the own trigger, batch parity)
+            skip_own = gkey if accepted and self.commit_before else None
+            if cond0 is None:
+                for k2, g2 in list(groups.items()):
+                    if k2 != skip_own and g2["st"].get("__n", 0) > 0:
+                        trigger(k2, g2, row)
+                continue
+            if not heap:
+                continue
+            fv = cond0.in_key(row)
+            if fv is None or fv != fv:
+                continue
+            due = []
+            while heap and holds(fv, heap[0][4]):
+                e = heapq.heappop(heap)
+                if version.get(e[3]) == e[2]:
+                    due.append(e)
+            due.sort(key=lambda e: e[1])
+            for e in due:
+                k2 = e[3]
+                if k2 == skip_own or not trigger(k2, groups[k2], row):
+                    heapq.heappush(heap, e)
+        return out_rows
+
+
+def commit_worker(
+    df: DataFrame, fold: WorkerFold, order_col: str | list[str], output_schema: str
+) -> DataFrame:
+    """Batch check-all COMMIT: the whole input in one ordered pass
+    through ``fold``, the ``WorkerFold`` the always-on worker runs.
+
+    Rows sort by ``order_col`` (NULLs last, as ``decode_rows`` sorts a
+    micro-batch), then by their input position, taken before the
+    single-partition exchange: tied rows fold in input order, which
+    is the order the worker sees a one-micro-batch input in.
+    ``mapInPandas`` keeps that order and folds each Arrow batch with
+    one ``groups`` hashtable that carries over from batch to batch,
+    as it does between micro-batches. Cross-group visibility is
+    inherent to check-all conditions, so the fold runs in one task,
+    the reference's one-worker-per-function model.
+    """
+    int_cols, cols = int_columns(df.schema), _schema_names(output_schema)
+
+    def run(pdfs: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        groups: dict[tuple, dict] = {}
+        for pdf in pdfs:
+            out_rows = fold(groups, decode_rows([pdf], None, int_cols))
+            if out_rows:
+                yield encode_rows(out_rows, cols)
+
+    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
+    order = [F.col(c).asc_nulls_last() for c in [*order_cols, "__pos"]]
+    ordered = (
+        df.withColumn("__pos", F.monotonically_increasing_id())
+        .repartition(1)
+        .sortWithinPartitions(*order)
+        .drop("__pos")
+    )
+    return ordered.mapInPandas(run, schema=output_schema)

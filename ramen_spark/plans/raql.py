@@ -6606,10 +6606,11 @@ def _reads(op: Operation, prefixes: tuple[str, ...]) -> bool:
 def _plan_commit(op: Operation | str, df: DataFrame, params):
     """The planning step both COMMIT engines share: parse, rewrite
     event time, default the condition, expand ``*``, inline select
-    refs, detect sequential mode, materialize computed GROUP BY keys
-    and decide check-all once. Returns ``(op, df, flush, keys,
-    sequential, check_all)``; ``df`` carries the ``_gk{i}`` key
-    columns."""
+    refs, detect sequential mode, materialize computed GROUP BY keys,
+    decide check-all once and apply a WHERE the fold need not run.
+    Returns ``(op, df, flush, keys, sequential, check_all)``; ``df``
+    carries the ``_gk{i}`` key columns, and ``op.where`` stays set only
+    when the fold runs it."""
     if isinstance(op, str):
         op = parse_operation(op)
     op = _rewrite_event_time(op)
@@ -6648,7 +6649,31 @@ def _plan_commit(op: Operation | str, df: DataFrame, params):
         and check_commit_for_all(cond)
         and not any(isinstance(n, Call) and n.fn in ROW_STATEFUL for n in _walk(cond))
     )
+    # WHERE: stateless → Catalyst filter before the fold (the
+    # reference's where_fast); stateful → evaluated inside the fold,
+    # and so is a check-all WHERE: check_commit_for_all runs for EVERY
+    # input tuple, including ones failing WHERE (CodeGenLib_Skeletons.
+    # ml:808-812 runs after the `None -> ()` where-fail branch;
+    # patterns.test commits on a Volvo row the WHERE rejects) — unless
+    # SORT LAST buffers the filtered rows first.
+    if op.where is not None and not (
+        (check_all and op.sort_last is None) or _stateful(op.where)
+    ):
+        df, op = _filtered(df, op.where, params), replace(op, where=None)
     return op, df, flush, keys, sequential, check_all
+
+
+def _stateful(node) -> bool:
+    return any(
+        isinstance(n, Call) and (n.fn in ROW_STATEFUL or n.fn in AGGS)
+        for n in _walk(node)
+    )
+
+
+def _filtered(df: DataFrame, where, params) -> DataFrame:
+    """``df`` under a stateless WHERE, as a Catalyst filter."""
+    sch = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
+    return df.filter(Compiler(params, schema=sch).col(where))
 
 
 def compile_commit_operation(
@@ -6659,52 +6684,29 @@ def compile_commit_operation(
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Compile a RaQL operation WITH a general COMMIT clause onto the
-    commit engine (operators.aggregate.commit_aggregate): one shuffle
-    on the GROUP BY key, ordered Python fold within each group —
-    RaQL's windowing-beyond-SQL semantics (SURVEY §2.2 COMMIT row),
-    including KEEP/FLUSH and COMMIT BEFORE re-seeding.
+    commit engine (operators.aggregate) — RaQL's windowing-beyond-SQL
+    semantics (SURVEY §2.2 COMMIT row), including KEEP/FLUSH and COMMIT
+    BEFORE re-seeding.
 
     GROUP BY keys may be arbitrary expressions (materialized as
     computed columns so they survive the shuffle). ``output_schema``
     is the Spark DDL of the select list; omitted → inferred from the
     source schema (infer_output_schema). Rows fold in ``ts``-column
-    order if present, else input order column ``_rowid``.
+    order if present, else input order.
 
-    Check-all commit conditions (``_plan_commit``) cogroup every group
-    with the global trigger relation: the condition's input columns
-    for every input row, at which each live group re-checks its
-    commit."""
-    from ramen_spark.operators.aggregate import commit_aggregate
+    Conditions over the group's own state fold per group
+    (``commit_aggregate``: one shuffle on the GROUP BY key, ordered
+    Python fold within each group). Check-all conditions
+    (``_plan_commit``), which re-check every live group at each input,
+    run through the ``WorkerFold`` the always-on worker runs
+    (``_worker_fold``, ``commit_worker``): one ordered pass over the
+    whole input, ties in the order column broken by input position —
+    the order the worker sees a one-micro-batch input in. Their cond0
+    term, a pure-``in`` condition included, lets a row check only the
+    groups that may fire."""
+    from ramen_spark.operators.aggregate import commit_aggregate, commit_worker
 
     op, df, flush, keys, sequential, check_all = _plan_commit(op, source_df, params)
-
-    # WHERE: stateless → Catalyst filter before the shuffle (the
-    # reference's where_fast); stateful → evaluated inside the fold
-    df_pre = None  # pre-WHERE relation for the check-all trigger scan
-    fold_where = None
-    if op.where is not None:
-        if any(
-            isinstance(n, Call) and (n.fn in ROW_STATEFUL or n.fn in AGGS)
-            for n in _walk(op.where)
-        ):
-            fold_where = op.where
-        else:
-            if check_all and op.sort_last is None:
-                # check_commit_for_all runs for EVERY input tuple,
-                # including ones failing WHERE (CodeGenLib_Skeletons.
-                # ml:808-812 runs after the `None -> ()` where-fail
-                # branch; patterns.test commits on a Volvo row the
-                # WHERE rejects). Keep the pre-filter relation for the
-                # trigger scan, assigning the shared order column
-                # BEFORE the filter so positions align.
-                if order_cols is None and "ts" not in df.columns:
-                    df = df.withColumn(
-                        "_rowid", F.monotonically_increasing_id()
-                    )
-                df_pre = df
-            sch = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
-            df = df.filter(Compiler(params, schema=sch).col(op.where))
-            op = replace(op, where=None)
 
     if order_cols is None and op.sort_last is not None:
         n_buf, by_nodes, until_node = op.sort_last
@@ -6756,8 +6758,6 @@ def compile_commit_operation(
         # time is the deterministic analogue of arrival order and keeps
         # per-group folds parallel (no global arrival funnel needed).
         order_col = "start"
-    elif "_rowid" in df.columns:
-        order_col = "_rowid"  # assigned pre-WHERE for the trigger scan
     else:
         df = df.withColumn("_rowid", F.monotonically_increasing_id())
         order_col = "_rowid"
@@ -6767,49 +6767,32 @@ def compile_commit_operation(
 
     # count-window fast path: AFTER-mode, FLUSH, stateless-where-only
     # shapes lower to native window aggregates (no Python fold). A
-    # check-all shape may still lower: the count condition is
-    # per-group state only, so the check-all trigger scan is subsumed
-    # by the lowered window (each group's own rows are its triggers).
+    # check-all shape may still lower, its WHERE filtering first: the
+    # count condition reads only per-group state, so re-checking a
+    # flushed-on-fire group at another input (WHERE-rejected ones
+    # included) never fires — each group's own rows are its triggers.
     if (
         not op.commit_before
         and flush
-        and fold_where is None
+        and (op.where is None or not _stateful(op.where))
         and (op.sort_last is None or op.sort_last[2] is None)
     ):
         lowered = _try_lower_count_commit(
-            df, op, keys, order_col, params, output_schema
+            df if op.where is None else _filtered(df, op.where, params),
+            op, keys, order_col, params, output_schema,
         )
         if lowered is not None:
             return lowered
 
-    # the trigger relation (the reference's explicitly-slow check-all
-    # path, src/CodeGenLib_Skeletons.ml:810-868): the in-referenced
-    # columns of EVERY row, built only when the fold actually runs — as
-    # a DATAFRAME that rides the shuffle (cogroup in commit_aggregate),
-    # never a driver-side collect
-    trigger_df = None
-    trigger_in_cols: list[str] = []
-    if check_all:
-        first_order = order_col if isinstance(order_col, str) else order_col[0]
-        trig_src = df_pre if df_pre is not None else df
-        trigger_in_cols = sorted(
-            {
-                _strip_ns(n.path)
-                for n in _walk(op.commit_after)
-                if isinstance(n, Field)
-                and not n.path.startswith(_LAST_OUT_NS + ("out.", "param.", "#"))
-                and _strip_ns(n.path) in df.columns
-            }
-        )
-        # __tc_ prefix: fresh exprIds AND no name collision with
-        # the group keys when commit_aggregate replicates the
-        # trigger relation per key (crossJoin on the same source)
-        trigger_df = trig_src.select(
-            F.col(first_order).alias("__trig_ord"),
-            *[F.col(c).alias(f"__tc_{c}") for c in trigger_in_cols],
-        )
-
     fold = _Fold(op, params, sequential=sequential)
+    where_fn = fold.update_where if op.where is not None else None
+    if check_all:
+        return commit_worker(
+            df,
+            _worker_fold(op, fold, keys, flush, sequential, where_fn),
+            order_col,
+            output_schema,
+        )
     return commit_aggregate(
         df,
         key_cols=keys,
@@ -6821,9 +6804,7 @@ def compile_commit_operation(
         output_schema=output_schema,
         commit_before=op.commit_before,
         flush=flush,
-        where=fold.update_where if fold_where is not None else None,
-        trigger_df=trigger_df,
-        trigger_in_cols=trigger_in_cols,
+        where=where_fn,
     )
 
 
@@ -6846,12 +6827,13 @@ def compile_commit_streaming(
     every group on any incoming tuple (count.ramen, tumbling.ramen) to
     streaming.commit's WORKER mode: one state-store entry holds the
     whole group hashtable, the reference's one-worker-per-function
-    loop — cross-group visibility is inherent to the semantics; a
-    ``cond0`` term of the condition (_commit_cond0) lets each row check
-    only the groups that may fire. Other conditions stay on the
-    per-group-partitioned scale path. Not supported here (batch-only):
-    SORT LAST (reorder repair belongs to the watermark in
-    streaming)."""
+    loop — cross-group visibility is inherent to the semantics. It
+    runs the same ``WorkerFold`` (``_worker_fold``) as the batch
+    engine; a ``cond0`` term of the condition (_commit_cond0) lets
+    each row check only the groups that may fire. Other conditions
+    stay on the per-group-partitioned scale path. Not supported here
+    (batch-only): SORT LAST (reorder repair belongs to the watermark
+    in streaming)."""
     return _commit_streaming(op, stream_df, output_schema, params, order_cols)[0]
 
 
@@ -6874,21 +6856,6 @@ def _commit_streaming(
     if op.sort_last is not None:
         raise NotImplementedError("SORT LAST in streaming: use the watermark")
 
-    fold_where = None
-    if op.where is not None:
-        if check_all or any(
-            isinstance(n, Call) and (n.fn in ROW_STATEFUL or n.fn in AGGS)
-            for n in _walk(op.where)
-        ):
-            # check-all: even WHERE-rejected rows are commit triggers
-            # (CodeGenLib_Skeletons.ml:808-812) — the filter must run
-            # inside the worker fold, not as a Catalyst pre-filter
-            fold_where = op.where
-        else:
-            sch = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
-            df = df.filter(Compiler(params, schema=sch).col(op.where))
-            op = replace(op, where=None)
-
     if order_cols is not None:
         # explicit [] ⇒ arrival order within each micro-batch (the
         # reference's ringbuf consumption order)
@@ -6905,31 +6872,14 @@ def _commit_streaming(
         output_schema = infer_output_schema(op, df.schema, params)
 
     fold = _Fold(op, params, sequential=sequential)
-    where_fn = fold.update_where if fold_where is not None else None
+    where_fn = fold.update_where if op.where is not None else None
     constant_key = check_all or not keys
     if check_all:
-        # a flushed group is dropped unless something reads its last
-        # output or keeps per-group state past the flush
-        keep_flushed = (
-            not flush
-            or sequential
-            or bool(fold.where_rows)
-            or _reads(op, _LAST_OUT_NS)
-        )
         return streaming_commit_worker(
             df,
-            key_cols=keys,
+            fold=_worker_fold(op, fold, keys, flush, sequential, where_fn),
             order_col=order_col,
-            init_state=fold.init_state,
-            update=fold.update,
-            finalize=fold.finalize,
-            commit_cond=fold.commit_cond,
             output_schema=output_schema,
-            commit_before=op.commit_before,
-            flush=flush,
-            where=where_fn,
-            cond0=None if sequential else _commit_cond0(op, fold),
-            keep_flushed=keep_flushed,
         ), constant_key
     return streaming_commit_aggregate(
         df,
@@ -6944,6 +6894,28 @@ def _commit_streaming(
         flush=flush,
         where=where_fn,
     ), constant_key
+
+
+def _worker_fold(op: Operation, fold: _Fold, keys, flush, sequential, where_fn):
+    """The one ``WorkerFold`` batch (``commit_worker``) and streaming
+    (``streaming_commit_worker``) run for a check-all condition, over
+    ``fold``'s callbacks: with the condition's cond0 term (none in
+    sequential mode, whose one group needs no index), and dropping a
+    flushed group unless something reads its last output or keeps
+    per-group state past the flush."""
+    from ramen_spark.operators.aggregate import WorkerFold
+
+    return WorkerFold(
+        keys, fold.init_state, fold.update, fold.finalize, fold.commit_cond,
+        commit_before=op.commit_before,
+        flush=flush,
+        where=where_fn,
+        cond0=None if sequential else _commit_cond0(op, fold),
+        keep_flushed=(
+            not flush or sequential or bool(fold.where_rows)
+            or _reads(op, _LAST_OUT_NS)
+        ),
+    )
 
 
 _LAST_OUT_NS = ("previous.", "local_last.", "local_last_out.", "global_last")
@@ -6980,21 +6952,30 @@ def _cond0_side(node) -> str | None:
 
 def _commit_cond0(op: Operation, fold: _Fold):
     """The reference's ``cond0`` (src/CodeGenLib_Skeletons.ml:505-527)
-    for the streaming worker: the first comparison ``f(in) OP g(out)``
-    (OP one of > >= < <=, either side order) that is the whole commit
-    condition or a top-level AND conjunct, so the condition holds only
-    where the term does. Returns a streaming.commit.Cond0 whose keys
-    evaluate f on the input row and g on the group's trigger-path
-    candidate (the same memoized ``finalize`` call commit_cond makes),
-    or None: no such term, or a volatile select field or condition
-    whose draws would depend on which groups get checked."""
-    from ramen_spark.streaming.commit import Cond0
+    for the check-all ``WorkerFold`` of both engines: the first
+    comparison ``f(in) OP g(out)`` (OP one of > >= < <=, either side
+    order) that is the whole commit condition or a top-level AND
+    conjunct, so the condition holds only where the term does. Returns
+    an operators.aggregate.Cond0 whose keys evaluate f on the input
+    row and g on the group's trigger-path candidate (the same memoized
+    ``finalize`` call commit_cond makes). A condition that reads only
+    the input row (and params/literals) is its own term: ``cond(in) >
+    False``, so a row it rejects checks no group. None: no such term,
+    or a volatile select field or condition whose draws would depend
+    on which groups get checked."""
+    from ramen_spark.operators.aggregate import Cond0
 
     cond = op.commit_after
     if _volatile(cond) or any(
         _volatile(f_.expr) for f_ in op.fields if not isinstance(f_.expr, Star)
     ):
         return None
+    if _cond0_side(cond) == "in":
+        return Cond0(
+            lambda row: fold._eval(cond, row, None, None, None) is True,
+            lambda st, prev: False,
+            ">",
+        )
 
     def conjuncts(n):
         if isinstance(n, Binop) and n.op == "and":

@@ -109,8 +109,9 @@ def tumbling_revenue_per_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship benchmark shape (site/blog/2019-02.php):
     per-minute tumbling GROUP BY with SUM + conditional AVG — RaQL
     ``GROUP BY type, time//60 COMMIT AFTER in.time > out.time + slack``
-    lowered to a native tumbling aggregate (operators.aggregate fast
-    path). One shuffle; windows never buffer raw rows."""
+    lowered to a native tumbling aggregate (a plain Catalyst ``groupBy``
+    on the minute bucket, as plans.raql.compile_operation lowers it).
+    One shuffle; windows never buffer raw rows."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         "event_type",

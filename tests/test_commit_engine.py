@@ -13,9 +13,8 @@ runtime src/CodeGenLib_Skeletons.ml:620-695):
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from ramen_spark.operators.aggregate import commit_aggregate, tumbling_aggregate
+from ramen_spark.operators.aggregate import commit_aggregate
 
 
 @pytest.fixture(scope="module")
@@ -106,16 +105,21 @@ def test_single_global_group(spark):
 
 
 def test_tumbling_fast_path_equals_general_engine(spark):
-    """The native tumbling lowering and the general COMMIT engine agree
-    on 'GROUP BY k, t//10 with full windows' — the lowering contract
-    of SURVEY §4 (custom work item 3)."""
+    """The native tumbling lowering (compile_operation's plain
+    ``GROUP BY k, t // 10``) and the general COMMIT engine agree on
+    full windows — the lowering contract of SURVEY §4 (custom work
+    item 3)."""
+    from ramen_spark.plans.raql import compile_operation
+
     rows = [(("a", "b")[i % 2], float(i), 1.0) for i in range(100)]
     df = spark.createDataFrame(rows, "k string, t double, v double")
 
-    fast = tumbling_aggregate(
-        df, ["k"], "t", 10.0, [F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")]
+    fast = compile_operation(
+        "select k, t // 10 as time_bucket, sum v as s, count 1 as n "
+        "group by k, t // 10",
+        df,
     )
-    fast_rows = {(r["k"], r["time_bucket"], r["s"], r["n"]) for r in fast.collect()}
+    fast_rows = {(r["k"], int(r["time_bucket"]), r["s"], r["n"]) for r in fast.collect()}
 
     def update(st, row):
         st.setdefault("rows", []).append(row)
@@ -199,6 +203,20 @@ def test_count_commit_lowers_and_matches_fold(spark):
     )
     assert got3 == [("a", 2, ), ("a", 2,), ("b", 3,), ("b", 3,)]
 
+    # a stateless WHERE filters before the lowered windows, although the
+    # check-all fold would run it inside (`count v` reads in.v): the
+    # rows it rejects re-check only groups whose count did not move
+    got, out = run(
+        "select k, sum v as s, count v as n where seq <> 1 "
+        "group by k commit after count v >= 2",
+        "k string, s double, n long",
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InPandas" not in plan and "Window" in plan, plan
+    # a: non-null v minus seq 1 = [0,3,4,6]; b: [0,2,3,4,5,6]
+    assert got == [("a", 3.0, 2), ("a", 10.0, 2), ("b", 2.0, 2),
+                   ("b", 7.0, 2), ("b", 11.0, 2)]
+
 
 def test_count_commit_ineligible_falls_back(spark):
     """Shapes the lowering can't express (previous-namespace refs,
@@ -216,8 +234,8 @@ def test_count_commit_ineligible_falls_back(spark):
         order_cols=["seq"],
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # fold (cogrouped with the distributed trigger relation), not lowered
-    assert "FlatMapCoGroupsInPandas" in plan
+    # the check-all fold (one ordered pass), not lowered
+    assert "MapInPandas" in plan and "Window" not in plan
     got = sorted((r["pv"], r["s"]) for r in out.collect())
     assert got == [(1.0, 3.0), (4.0, 12.0)]
 

@@ -295,11 +295,11 @@ def test_connected_components_shuffles_per_round(spark):
 
 
 def test_checkall_triggers_stay_distributed(spark):
-    """check_commit_for_all conditions (COMMIT AFTER reading `in`)
-    must feed the trigger relation through the shuffle (cogrouped
-    fold), never a driver-side collect: the plan is a
-    FlatMapCoGroupsInPandas whose trigger child carries __trig_ord,
-    and plans/ contains no .collect() of unaggregated rows."""
+    """check_commit_for_all conditions (COMMIT AFTER reading `in`) fold
+    the whole input in one ordered pass through the worker fold: the
+    plan is one MapInPandas over a single-partition sort, with no
+    replicated trigger relation (no cogroup, no __trig_ord), and
+    plans/ contains no .collect() of unaggregated rows."""
     from ramen_spark.plans.raql import compile_commit_operation
 
     df = spark.createDataFrame(
@@ -307,27 +307,19 @@ def test_checkall_triggers_stay_distributed(spark):
         + [("b", i + 6, float(i)) for i in range(6)],
         "k string, seq int, v double",
     )
-    # in+out mixed condition
-    out = compile_commit_operation(
-        "select k, sum v as s group by k commit after in.seq > out.s",
-        df,
-        output_schema="k string, s double",
-        order_cols=["seq"],
-    )
-    plan = _plan(out)
-    assert "FlatMapCoGroupsInPandas" in plan, plan
-    assert "__trig_ord" in plan, plan
-
-    # pure-in condition: the same trigger relation, same property
-    out = compile_commit_operation(
-        "select k, sum v as s group by k commit after in.seq % 3 = 2",
-        df,
-        output_schema="k string, s double",
-        order_cols=["seq"],
-    )
-    plan = _plan(out)
-    assert "FlatMapCoGroupsInPandas" in plan, plan
-    assert "__trig_ord" in plan, plan
+    # in+out mixed condition, then a pure-in condition
+    for cond in ("in.seq > out.s", "in.seq % 3 = 2"):
+        out = compile_commit_operation(
+            f"select k, sum v as s group by k commit after {cond}",
+            df,
+            output_schema="k string, s double",
+            order_cols=["seq"],
+        )
+        plan = _plan(out)
+        assert plan.count("MapInPandas") == 1, plan
+        assert "SinglePartition" in plan and "Sort [seq" in plan, plan
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
+        assert "__trig_ord" not in plan, plan
 
 
 def test_no_driver_collect_in_plans():
@@ -349,8 +341,11 @@ def test_no_driver_collect_in_plans():
 def test_grouped_sort_until_no_global_funnel(spark):
     """SORT LAST … OR UNTIL with a GROUP BY shards the reorder buffer
     by group key (reference buffers are worker-local,
-    src/RamenSortBuf.ml) — the plan must hash-partition on the key,
-    not funnel the stream through a SinglePartition exchange."""
+    src/RamenSortBuf.ml) — the plan must hash-partition on the key
+    before the buffer. The condition reads ``in.v`` (inside ``count
+    v``), so it is check-all: the fold after the buffer re-checks
+    every live group at each input and runs as one ordered pass in a
+    single partition, as the reference's one worker does."""
     from ramen_spark.plans.raql import compile_commit_operation
 
     rows = [("a", 3, 30.0), ("a", 1, 10.0), ("b", 1, 1.0),
@@ -364,7 +359,6 @@ def test_grouped_sort_until_no_global_funnel(spark):
         output_schema="k string, lv double, n long",
     )
     plan = _plan(out)
-    assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(k" in plan, plan
     got = {(r["k"], r["lv"], r["n"]) for r in out.collect()}
     # per-group emission order is seq order → last v is the max-seq v
