@@ -10,6 +10,12 @@ the retention horizon, and registers everything in an
 ``api.ArchiveCatalog`` — after which the whole read surface
 (metrics_find / render / get-timeseries / replay_via_recompute /
 the archivist solver) serves those functions with no further wiring.
+
+`deploy_program_streaming` is the always-on mode: every function runs
+as its own Structured Streaming query and appends to its own parquet
+spool, and a child reads the nearest durable stream — a stateless
+parent is inlined into its children's queries instead of being read
+back from its spool.
 """
 
 from __future__ import annotations
@@ -83,11 +89,20 @@ def deploy_program(
     return dfs, cat
 
 
-def _compile_fn(op, src, params, order_cols) -> tuple[DataFrame, bool]:
+# univocity's input buffer for the live CSV tail: Spark builds one
+# parser per file, with a 1 Mi-char buffer by default that the tail's
+# small files leave mostly empty, and each file is parsed by every
+# query that reads the tail through inlined stateless functions. A
+# longer cell still parses: the buffer refills.
+_CSV_BUFFER_CHARS = 16384
+
+
+def _compile_fn(op, src, params, order_cols) -> tuple[DataFrame, str]:
     """Route one function's Operation to the streaming fold engine or
     the stateless Column compiler (the same decision the batch body
-    makes). Also returns whether the query's stateful operator groups
-    by a constant key."""
+    makes). Also returns the route: ``"stateless"`` (compile_operation),
+    ``"keyed"`` (a per-group fold) or ``"constant"`` (a fold whose
+    stateful operator groups by a constant key)."""
     from pyspark.sql.types import ArrayType
 
     from ramen_spark.plans.raql import (
@@ -103,11 +118,53 @@ def _compile_fn(op, src, params, order_cols) -> tuple[DataFrame, bool]:
     if _needs_fold_engine(op, src_arr) or op.group_by or (
         op.commit_after is not None
     ):
-        return _commit_streaming(op, src, None, params, order_cols)
-    return compile_operation(op, src, params), False
+        df, constant_key = _commit_streaming(op, src, None, params, order_cols)
+        return df, "constant" if constant_key else "keyed"
+    return compile_operation(op, src, params), "stateless"
 
 
-def _start_spooled(spark, compiled, constant_key, work_dir, prog_name, name):
+def _inlinable(op, route: str, n_parents: int) -> bool:
+    """Whether children read this function's compiled stream rather
+    than its spool: a stateless projection and WHERE over one parent.
+    SORT LAST is a stateful reorder buffer, and a volatile field (RANDOM,
+    now) would draw one value per query that evaluates it."""
+    from ramen_spark.plans.raql import Star, _volatile
+
+    exprs = [f_.expr for f_ in op.fields if not isinstance(f_.expr, Star)]
+    return (
+        route == "stateless"
+        and op.sort_last is None
+        and n_parents == 1
+        and not any(_volatile(e) for e in exprs + [op.where] if e is not None)
+    )
+
+
+def _logs_spool(ckpt: str, spool: str) -> bool:
+    """Whether a file source of checkpoint ``ckpt`` has logged a file of
+    ``spool``: the query was started reading that spool and must keep
+    reading it. Spark does not tie a file-source log to its directory:
+    restarted on another one, the source replays the logged spool files
+    under the new base path, which fails the query, and takes every
+    file of the new directory for unseen."""
+    import glob
+    import json
+    import os
+    from urllib.parse import unquote, urlparse
+
+    spool = os.path.abspath(spool)
+    for log in glob.glob(os.path.join(glob.escape(ckpt), "sources", "*", "*")):
+        with open(log) as fh:
+            for line in fh.read().splitlines()[1:]:
+                try:
+                    path = json.loads(line)["path"]
+                except (ValueError, TypeError, KeyError):
+                    continue  # not a file-source entry
+                if os.path.dirname(unquote(urlparse(path).path)) == spool:
+                    return True
+    return False
+
+
+def _start_spooled(spark, compiled, route, work_dir, prog_name, name):
     """Start one function's query, appending to the parquet spool
     ``work_dir/<prog>/<fn>`` (checkpoint ``work_dir/_ckpt/<prog>/<fn>``).
     A constant-key stateful query starts with ONE state partition (see
@@ -121,13 +178,10 @@ def _start_spooled(spark, compiled, constant_key, work_dir, prog_name, name):
     writer = (
         compiled.writeStream.format("parquet")
         .option("path", spool)
-        .option(
-            "checkpointLocation",
-            os.path.join(work_dir, "_ckpt", prog_name, name),
-        )
+        .option("checkpointLocation", _ckpt_dir(work_dir, prog_name, name))
         .outputMode("append")
     )
-    if not constant_key:
+    if route != "constant":
         return compiled, writer.start(), spool
     # start() clones the session conf, so the override covers this
     # one query only
@@ -141,6 +195,12 @@ def _start_spooled(spark, compiled, constant_key, work_dir, prog_name, name):
     return compiled, q, spool
 
 
+def _ckpt_dir(work_dir: str, prog_name: str, name: str) -> str:
+    import os
+
+    return os.path.join(work_dir, "_ckpt", prog_name, name)
+
+
 def deploy_program_streaming(
     spark: SparkSession,
     prog,
@@ -150,12 +210,22 @@ def deploy_program_streaming(
     order_cols: dict[str, list[str]] | None = None,
 ):
     """The reference's ALWAYS-ON mode at the program level: every
-    function runs as its own Structured Streaming query, chained
-    through durable parquet spools (the Spark twin of the reference's
-    per-function ringbufs, src/RingBuf.ml — a worker's output buffer
-    IS its children's input). Spooling between stages is also what
-    makes arbitrary stateful chaining legal: each stateful operator
-    lives in its own query, exactly one per function.
+    function runs as its own Structured Streaming query and appends
+    to its own durable parquet spool (the Spark twin of the reference's
+    per-function ringbufs, src/RingBuf.ml), which users and `ramen
+    tail` read.
+
+    A child reads the nearest durable stream. A stateless parent (a
+    projection and WHERE over one parent, with no SORT LAST and no
+    RANDOM or now) is inlined: the child reads the parent's compiled
+    streaming DataFrame, so it waits for no parent micro-batch — the
+    reference's top-half WHERE run close to the source (SURVEY §4).
+    Every other parent — a fold, a YIELD clock, a volatile or SORT
+    LAST function — is read through its spool, and an inlined chain
+    always bottoms out at a spool, a CSV/file source or an injected
+    stream. Each query thus holds at most one stateful operator. A
+    child whose checkpoint was started reading a now-inlined parent's
+    spool keeps reading that spool (see _logs_spool).
 
     ``source_streams``: name → streaming DataFrame for external
     parents. Each function compiles from its parsed RaQL Operation —
@@ -199,6 +269,24 @@ def deploy_program_streaming(
     )
     params.setdefault("__globals_rel", {})
     out: dict[str, tuple[DataFrame, Any, str]] = {}
+    inlined: set[str] = set()  # functions whose children read out[fn][0]
+
+    def _of(parent: str, child: str) -> DataFrame:
+        stream_df, q, spool = out[parent]
+        if q is None or (
+            parent in inlined
+            and not _logs_spool(_ckpt_dir(work_dir, prog.name, child), spool)
+        ):
+            # a source (CSV tail / injected stream) or an inlined
+            # stateless function: chain on its compiled stream, which
+            # bottoms out at a durable stream
+            return stream_df
+        return (
+            spark.readStream.schema(stream_df.schema)
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(spool)
+        )
+
     order = prog._topo_order()
     for name in order:
         fn = prog.functions[name]
@@ -225,6 +313,7 @@ def deploy_program_streaming(
                 spark.readStream.format("csv")
                 .schema(schema)
                 .option("sep", rc.separator)
+                .option("inputBufferSize", _CSV_BUFFER_CHARS)
             )
             if rc.null_str:
                 reader = reader.option("nullValue", rc.null_str)
@@ -276,22 +365,10 @@ def deploy_program_streaming(
                 candidates.append(
                     posixpath.normpath(posixpath.join(prog.name, parent))
                 )
-            def _of(entry):
-                stream_df, pq_, spool = entry
-                if pq_ is None:
-                    # source function (CSV tail / injected stream):
-                    # chain directly — it is durable upstream
-                    return stream_df
-                return (
-                    spark.readStream.schema(stream_df.schema)
-                    .option("pathGlobFilter", "*.parquet")
-                    .parquet(spool)
-                )
-
             resolved = None
             for c in candidates:
                 if c in out:
-                    resolved = [_of(out[c])]
+                    resolved = [_of(c, name)]
                     break
                 if c in source_streams:
                     resolved = [source_streams[c]]
@@ -342,8 +419,10 @@ def deploy_program_streaming(
                 # order within each micro-batch — the reference's
                 # ringbuf consumption order
                 oc = []
+        compiled, route = _compile_fn(fn.op, src, params, oc)
+        if _inlinable(fn.op, route, len(parents)):
+            inlined.add(name)
         out[name] = _start_spooled(
-            spark, *_compile_fn(fn.op, src, params, oc),
-            work_dir, prog.name, name,
+            spark, compiled, route, work_dir, prog.name, name
         )
     return out

@@ -389,13 +389,16 @@ def run_spec_file_streaming(
 ):
     """`ramen test` in the ALWAYS-ON mode: every relational function of
     every listed program runs as its own Structured Streaming query
-    chained through parquet spools (runner.deploy_program_streaming —
-    the reference runs *everything* streaming, one worker per function,
-    src/RamenSupervisor.ml). Source-shaped functions (YIELD clocks,
-    READ/LISTEN sources, fixture readers) are materialized once in
-    batch, written to parquet with an explicit ``_seq`` arrival column,
-    and replayed byte-identically into BOTH engines — the reference
-    test-runner's feed mechanism (src/RamenTests.ml). The spec's
+    with its own parquet spool (runner.deploy_program_streaming — the
+    reference runs *everything* streaming, one worker per function,
+    src/RamenSupervisor.ml); a child reads a stateless parent inlined
+    into its own query and any other parent through its spool, and a
+    later program reads this one's functions through their spools.
+    Source-shaped functions (YIELD clocks, READ/LISTEN sources,
+    fixture readers) are materialized once in batch, written to
+    parquet with an explicit ``_seq`` arrival column, and replayed
+    byte-identically into BOTH engines — the reference test-runner's
+    feed mechanism (src/RamenTests.ml). The spec's
     present/absent checks then run against the STREAMING outputs.
 
     Returns (failures, n_streamed): the check failures (empty = pass)

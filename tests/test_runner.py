@@ -115,10 +115,12 @@ def test_archive_stream_lands_partitioned(spark, tmp_path):
 
 
 def test_deploy_program_streaming_chain(spark, tmp_path):
-    """The always-on mode: a two-function RaQL program runs as chained
-    streaming queries through parquet spools (per-function queries =
-    the reference's one-worker-per-function model); results match the
-    batch materialization of the SAME program."""
+    """The always-on mode: each function of a two-function RaQL
+    program runs as its own streaming query with its own parquet spool
+    (per-function queries = the reference's one-worker-per-function
+    model), the fold reading the source through the inlined stateless
+    ``big``; results match the batch materialization of the SAME
+    program."""
     from pyspark.sql import functions as F
 
     from ramen_spark.runner import deploy_program_streaming
@@ -148,7 +150,6 @@ DEFINE per_user AS
         spark, prog, str(tmp_path / "work"), {"src": stream}
     )
     try:
-        # drive in topo order so children see the parents' spools
         for name in ("big", "per_user"):
             deployed[name][1].processAllAvailable()
         got = sorted(
@@ -401,3 +402,182 @@ def test_existing_checkpoint_keeps_its_state_partitions(spark, tmp_path):
     # a window that opened in the first file commits in the second
     assert any(t0 < 20 <= t1 for t0, t1, *_ in exp)
     assert got == exp
+
+
+# ---------------------------------------------------------------------------
+# inlined stateless parents
+# ---------------------------------------------------------------------------
+
+# ``clean`` and ``wide`` are stateless, so ``win`` and ``alert`` read
+# the source through them; ``noisy`` draws RANDOM and ``sorted`` holds
+# a SORT LAST buffer, so their children read their spools.
+INLINE_PROG = """
+DEFINE clean AS
+  SELECT ts, k, v, v * 2 AS v2
+  FROM src
+  WHERE v >= 1;
+
+DEFINE wide AS
+  SELECT ts, k, v, v + v2 AS v3
+  FROM clean;
+
+DEFINE win AS
+  SELECT min ts AS t0, max ts AS t1, k, count 1 AS n, sum v3 AS s
+  FROM wide
+  GROUP BY k
+  COMMIT AFTER in.ts > out.t0 + 6 AND count 1 >= 2;
+
+DEFINE alert AS
+  SELECT ts, k, v3 FROM wide WHERE v3 > 9;
+
+DEFINE noisy AS
+  SELECT ts, k, v, random AS r FROM src;
+
+DEFINE noisy_child AS
+  SELECT ts, r FROM noisy WHERE v > 2;
+
+DEFINE sorted AS
+  SELECT ts, k, v FROM src SORT LAST 3 BY ts;
+
+DEFINE sorted_child AS
+  SELECT ts, v * 10 AS v10 FROM sorted;
+"""
+
+
+def test_stateless_parents_are_inlined(spark, tmp_path):
+    """A child of a stateless function reads the nearest durable
+    stream: the fold and the alert read the source directory through
+    ``clean`` and ``wide``, while the children of a RANDOM function
+    and of a SORT LAST function read their parents' spools. Every
+    function still fills its own spool, equal to batch."""
+    import os
+
+    from ramen_spark.runner import deploy_program_streaming
+
+    prog = compile_program(INLINE_PROG, name="inl")
+    src_dir = str(tmp_path / "src")
+    schema = "ts double, k string, v double"
+    spark.createDataFrame(_state_rows(0, 40), schema).coalesce(1) \
+        .write.parquet(src_dir)
+    stream = spark.readStream.schema(schema).parquet(src_dir)
+    deployed = deploy_program_streaming(
+        spark, prog, str(tmp_path / "work"), {"src": stream}
+    )
+    try:
+        got, reads = {}, {}
+        for fn in prog._topo_order():
+            _, q, spool = deployed[fn]
+            q.processAllAvailable()
+            reads[fn] = q.lastProgress["sources"][0]["description"]
+            got[fn] = _sorted_rows(spark.read.parquet(spool))
+    finally:
+        for _, q, _ in deployed.values():
+            q.stop()
+
+    def reads_dir(fn, path):
+        return reads[fn].rstrip("]").endswith(os.path.abspath(path))
+
+    assert reads_dir("win", src_dir) and reads_dir("alert", src_dir)
+    assert reads_dir("noisy_child", deployed["noisy"][2])
+    assert reads_dir("sorted_child", deployed["sorted"][2])
+    # one RANDOM draw per row: the child's values are the spool's
+    noisy = {(ts, r) for ts, _, _, r in got["noisy"]}
+    assert got["noisy_child"] and set(got["noisy_child"]) <= noisy
+    exp = _expected(spark, prog, src_dir)
+    for fn in ("noisy", "noisy_child"):
+        got[fn] = [row[:-1] for row in got[fn]]
+        exp[fn] = [row[:-1] for row in exp[fn]]
+    assert all(exp.values()) and got == exp
+
+
+def test_spool_reading_checkpoint_keeps_its_spool(spark, tmp_path):
+    """A child whose checkpoint was started reading a stateless
+    parent's spool keeps reading it after a redeploy: restarted on the
+    source, its file-source log would accept the source directory and
+    re-read every file. The output over both input files has no
+    duplicated row and equals batch."""
+    import os
+
+    from ramen_spark.plans.raql import compile_operation
+    from ramen_spark.runner import deploy_program_streaming
+
+    schema = "ts double, k string, v double"
+    prog = compile_program(INLINE_PROG.split("DEFINE win")[0] + """
+DEFINE alert AS
+  SELECT ts, k, v3 FROM wide WHERE v3 > 9;
+""", name="old")
+    src_dir = str(tmp_path / "src")
+    spark.createDataFrame(_state_rows(0, 20), schema).coalesce(1) \
+        .write.parquet(src_dir)
+    stream = spark.readStream.schema(schema).parquet(src_dir)
+    work = str(tmp_path / "work")
+
+    # the deploy's wiring before stateless parents were inlined: each
+    # function reads its parent's spool
+    src = stream
+    for fn in ("clean", "wide", "alert"):
+        spool = os.path.join(work, "old", fn)
+        compiled = compile_operation(prog.functions[fn].op, src)
+        q = (
+            compiled.writeStream.format("parquet")
+            .option("path", spool)
+            .option("checkpointLocation", os.path.join(work, "_ckpt", "old", fn))
+            .outputMode("append")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        src = (
+            spark.readStream.schema(compiled.schema)
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(spool)
+        )
+
+    spark.createDataFrame(_state_rows(20, 40), schema).coalesce(1) \
+        .write.mode("append").parquet(src_dir)
+    deployed = deploy_program_streaming(spark, prog, work, {"src": stream})
+    try:
+        for fn in ("clean", "wide", "alert"):
+            deployed[fn][1].processAllAvailable()
+        got = _sorted_rows(spark.read.parquet(deployed["alert"][2]))
+    finally:
+        for _, q, _ in deployed.values():
+            q.stop()
+    assert len(set(got)) == len(got)
+    assert got == _expected(spark, prog, src_dir)["alert"] and got
+
+
+def test_live_csv_tail_reads_long_and_null_cells(spark, tmp_path):
+    """The live CSV tail's small parser buffer refills: a cell much
+    longer than the buffer and a NULL cell stream in as batch
+    materialize reads them."""
+    from ramen_spark.runner import _CSV_BUFFER_CHARS, deploy_program_streaming
+
+    long = "x" * 100_000
+    assert len(long) > _CSV_BUFFER_CHARS
+    csv_dir = tmp_path / "csv"
+    csv_dir.mkdir()
+    (csv_dir / "data.csv").write_text(
+        f"1,a,1.5\n2,{long},\n3,,2.5\n4,{long[:17]},3.5\n"
+    )
+    prog = compile_program(f"""
+DEFINE raw AS
+  READ FROM FILE "{csv_dir / 'data.csv'}" AS CSV (
+    n u32, s string?, f float?
+  );
+
+DEFINE rows AS
+  SELECT n, s, f FROM raw;
+""", name="csvp")
+    deployed = deploy_program_streaming(spark, prog, str(tmp_path / "work"), {})
+    q = deployed["rows"][1]
+    try:
+        q.processAllAvailable()
+        got = _sorted_rows(spark.read.parquet(deployed["rows"][2]))
+    finally:
+        q.stop()
+    exp = _sorted_rows(prog.materialize(spark, register_views=False)["rows"])
+    assert got == exp
+    assert [len(s or "") for _, s, _ in got] == [1, 100_000, 0, 17]
